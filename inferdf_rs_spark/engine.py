@@ -2,9 +2,9 @@
 
 A ``System`` holds a deduped rule list (reference src/system/mod.rs:26-72)
 and runs deduction / fixpoint / validation over a (triples, terms)
-dataset pair.  Rule constants are dictionary-encoded once per system via
-one tiny Spark job so their ids agree byte-for-byte with bulk-encoded
-data (see terms.encode_terms).
+dataset pair.  Rule constants are dictionary-encoded once per system on
+the driver, with ids byte-identical to bulk-encoded data (see
+terms.encode_terms).
 """
 
 from __future__ import annotations
@@ -59,8 +59,8 @@ def build_dataset(spark: SparkSession, facts: list) -> Dataset:
     all_terms: list[Term] = []
     for s, p, o, _, g in norm:
         all_terms += [s, p, o] + ([g] if g is not None else [])
-    tdf = terms_df(spark, all_terms)
     ids = encode_terms(spark, all_terms)
+    tdf = terms_df(spark, ids)
     rows = [
         (
             ids[s], ids[p], ids[o], bool(sign), CAUSE_STATED, None, None, 0, "stated",
@@ -105,10 +105,7 @@ class System:
     def rule_constants_terms(self) -> DataFrame:
         """Terms dimension rows for all rule constants (merge into the
         dataset dictionary so decode/facet views cover them)."""
-        consts: list[Term] = []
-        for r in self.rules:
-            consts += r.constants()
-        return terms_df(self.spark, consts)
+        return terms_df(self.spark, self.const_ids())
 
     # ------------------------------------------------------------ entry 2
     def deduce(

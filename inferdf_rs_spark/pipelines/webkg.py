@@ -19,6 +19,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..encode import dedup_triples, encode_edges, term_rows
 from ..engine import Dataset, System
@@ -352,6 +353,10 @@ def write_graph(
     O(1) job commit) is enabled around the write — v1's sequential job
     commit is a second fan-out that grows with file count.
 
+    ``graph_meta.json`` records the bucket count, footer row counts,
+    per-bucket metrics and the triples/terms schemas (``StructType.json()``
+    strings) that ``read_graph`` opens the tables with.
+
     Iceberg would add snapshot isolation on a real cluster; the jars
     are not in this container, so plain parquet with identical layout."""
     spark = triples.sparkSession
@@ -409,6 +414,13 @@ def write_graph(
             "files": len(files),
         }
 
+    # read_graph opens with these instead of running one schema-inference
+    # job per table (a read lists the partition column last and makes
+    # every column nullable); an empty store wrote no triples file, so it
+    # records no triples schema and opens through the fallback as before
+    triples_schema = T.StructType(
+        [f for f in out.schema.fields if f.name != "p_bucket"] + [T.StructField("p_bucket", T.IntegerType())]
+    )
     with open(os.path.join(out_dir, "graph_meta.json"), "w") as f:
         json.dump(
             {
@@ -416,6 +428,8 @@ def write_graph(
                 "n_triples": parquet_row_count(tri_dir),
                 "n_terms": parquet_row_count(os.path.join(out_dir, "terms")),
                 "partitions": partitions,
+                "triples_schema": triples_schema.json() if total else None,
+                "terms_schema": terms.schema.json(),
             },
             f,
         )
@@ -436,33 +450,44 @@ def read_graph(spark: SparkSession, out_dir: str) -> Dataset:
     composition over ``triples``; the legacy ``_inferdf_p_buckets``
     attribute is still set for direct-DataFrame callers holding the
     pristine object.  The engine drops the extra column at fixpoint
-    entry, so the dataset still feeds every API."""
+    entry, so the dataset still feeds every API.
+
+    Both tables open with the schemas ``write_graph`` recorded in
+    ``graph_meta.json``, so opening submits no Spark job; a layout whose
+    meta has no schema (written before schemas were recorded) falls back
+    to parquet schema inference."""
     from pyspark.errors import AnalysisException
 
     from ..schemas import TRIPLES_SCHEMA
 
     try:
-        triples = spark.read.parquet(os.path.join(out_dir, "triples"))
+        with open(os.path.join(out_dir, "graph_meta.json")) as f:
+            meta = json.load(f)
+    except FileNotFoundError:
+        meta = {}
+
+    def read(table: str) -> DataFrame:
+        reader = spark.read
+        if meta.get(f"{table}_schema"):
+            reader = reader.schema(T.StructType.fromJson(json.loads(meta[f"{table}_schema"])))
+        return reader.parquet(os.path.join(out_dir, table))
+
+    try:
+        triples = read("triples")
     except AnalysisException:
         # an empty store writes no parquet files (nothing to infer from)
         triples = spark.createDataFrame([], TRIPLES_SCHEMA).withColumn(
             "p_bucket", F.lit(None).cast("int")
         )
-    p_buckets = None
-    n_triples = n_terms = None
-    try:
-        with open(os.path.join(out_dir, "graph_meta.json")) as f:
-            meta = json.load(f)
-        p_buckets = meta["n_p_buckets"]
-        n_triples = meta.get("n_triples")  # absent on pre-r5 layouts
-        n_terms = meta.get("n_terms")
-        triples._inferdf_p_buckets = p_buckets
-    except FileNotFoundError:
+    p_buckets = meta.get("n_p_buckets")
+    if p_buckets is None:
         triples = triples.drop("p_bucket")  # pre-meta layout: no pruning
+    else:
+        triples._inferdf_p_buckets = p_buckets
     return Dataset(
         triples,
-        spark.read.parquet(os.path.join(out_dir, "terms")),
+        read("terms"),
         p_buckets=p_buckets,
-        n_triples=n_triples,
-        n_terms=n_terms,
+        n_triples=meta.get("n_triples"),  # absent on pre-r5 layouts
+        n_terms=meta.get("n_terms"),
     )

@@ -22,6 +22,13 @@ os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 from pyspark.sql import SparkSession  # noqa: E402
 
 
+def _default_driver_memory() -> str:
+    """40 % of physical memory, capped at 24g: the local-mode driver JVM
+    is the whole engine, but must leave room for its Python workers."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, int(0.4 * phys / 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "inferdf_rs_spark",
     master: str | None = None,
@@ -30,11 +37,13 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's standard conf.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    host's core count); the driver heap to ``$SPARK_GRAFT_DRIVER_MEM``
+    (env, default 40 % of physical memory, at most 24g).
     ``shuffle_partitions`` defaults to the core count — at cluster scale
     this is instead set to ~2-3x total executor cores by the submitter.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -58,7 +67,7 @@ def get_spark(
         # rows (reference F9 parse), never runtime crashes.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # zstd over the snappy default: 3.5x fewer bytes on blob-heavy

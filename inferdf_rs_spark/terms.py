@@ -9,6 +9,13 @@ re-runs, resumed checkpoints and independently-encoded rule constants
 all agree without any sequential id generator (which cannot be
 replicated distributedly; reference's generator: src/rule/mod.rs:230-233).
 
+The id has two definitions that must agree: ``term_id_col`` (the Spark
+expression bulk encoding runs) and ``term_id`` (the same function on the
+driver, over ``xxh64.xxhash64``, for rule constants, query constants and
+fixtures — no Spark job).  tests/test_xxh64.py pins their parity at
+every id width, plus known vectors that fail loudly if a Spark upgrade
+changes ``xxhash64``.
+
 One resource id may carry several literal facets only after Eq-closure
 merging (reference ReverseTermInterpretation allows several literals per
 resource); ``resource_facets`` exposes the parsed-facet view with the
@@ -19,6 +26,7 @@ reference's refine/ambiguity semantics
 from __future__ import annotations
 
 from dataclasses import dataclass
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +51,7 @@ from .schemas import (
     XSD_DECIMAL_FAMILY,
     XSD_STRING,
 )
+from .xxh64 import xxhash64
 
 # sentinel for null datatype/lang inside the hash (never a legal IRI/tag)
 _NULL_S = "\x00"
@@ -172,41 +181,49 @@ def term_id_col(kind: Column, lexical: Column, datatype: Column, lang: Column) -
         return h1
     if ID_BITS < 64:  # test-only narrow width: forces birthday collisions
         return F.pmod(h1, F.lit(1 << ID_BITS)).cast("long")
-    from decimal import Decimal
-
     two63 = F.lit(Decimal(1 << 63))  # 2^63 > Long.MAX — must be a decimal literal
     h2 = F.xxhash64(F.lit("#id2"), *facets)  # independent second 64 bits
     return (h1.cast(_ID_DEC) * two63 + F.pmod(h2.cast(_ID_DEC), two63)).cast(_ID_DEC)
 
 
-def terms_df(spark: SparkSession, terms: list[Term]) -> DataFrame:
-    """Build a ``terms`` dimension DataFrame (with ids) from driver-side terms."""
-    rows = [(t.kind, t.lexical, t.datatype, t.lang) for t in sorted(set(terms), key=lambda t: (t.kind, t.lexical, t.datatype or "", t.lang or ""))]
-    base = spark.createDataFrame(rows, schema="kind int, lexical string, datatype string, lang string")
-    return base.select(
-        term_id_col(F.col("kind"), F.col("lexical"), F.col("datatype"), F.col("lang")).alias("term_id"),
-        "kind",
-        "lexical",
-        "datatype",
-        "lang",
+def term_id(t: Term) -> int | Decimal:
+    """Driver-side ``term_id_col`` for one term at the active width."""
+    facets = (
+        t.kind,
+        t.lexical,
+        _NULL_S if t.datatype is None else t.datatype,
+        _NULL_S if t.lang is None else t.lang,
     )
+    h1 = xxhash64(*facets)
+    if ID_BITS == 64:
+        return h1
+    if ID_BITS < 64:
+        return h1 % (1 << ID_BITS)
+    return Decimal(h1 * (1 << 63) + xxhash64("#id2", *facets) % (1 << 63))
 
 
 def encode_terms(spark: SparkSession, terms: list[Term]) -> dict[Term, int]:
-    """Resolve driver-side terms (rule constants, test fixtures) to ids.
+    """Resolve driver-side terms (rule constants, query constants, test
+    fixtures) to ids, in first-seen order.
 
-    Runs one tiny Spark job so the ids are byte-identical with the
-    Spark-side ``xxhash64`` used for bulk encoding — no Python
-    reimplementation of the hash to drift.
+    The ids are computed on the driver by ``term_id`` and submit no
+    Spark job; they equal the Spark-side ``term_id_col`` used for bulk
+    encoding, which tests/test_xxh64.py pins.  ``spark`` is unused and
+    kept for the callers' signature.
     """
-    uniq = list(dict.fromkeys(terms))
-    if not uniq:
-        return {}
-    df = terms_df(spark, uniq)
-    out: dict[Term, int] = {}
-    for r in df.collect():
-        out[Term(r["kind"], r["lexical"], r["datatype"], r["lang"])] = r["term_id"]
-    return {t: out[t] for t in uniq}
+    return {t: term_id(t) for t in dict.fromkeys(terms)}
+
+
+def terms_df(spark: SparkSession, terms: list[Term] | dict[Term, int]) -> DataFrame:
+    """Build a ``terms`` dimension DataFrame (with ids) from driver-side
+    terms, or from an ``encode_terms`` result so its ids are not
+    computed twice.  No Spark job runs."""
+    ids = terms if isinstance(terms, dict) else encode_terms(spark, terms)
+    rows = [
+        (ids[t], t.kind, t.lexical, t.datatype, t.lang)
+        for t in sorted(ids, key=lambda t: (t.kind, t.lexical, t.datatype or "", t.lang or ""))
+    ]
+    return spark.createDataFrame(rows, terms_schema())
 
 
 def encode_term_batch(df: DataFrame, kind: str = "kind", lexical: str = "lexical", datatype: str = "datatype", lang: str = "lang") -> DataFrame:

@@ -2,8 +2,10 @@
 entity linking, and a golden P/R harness over the synthesized pages."""
 
 import itertools
+from collections import Counter
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from inferdf_rs_spark.extraction import synth
 from inferdf_rs_spark.extraction.extract import extract_text, link_mentions, verify_fidelity
@@ -362,6 +364,7 @@ def test_write_graph_skewed_predicates_balanced_writers(spark, tmp_path):
     assert len(hub_files) >= 4, f"hub bucket written by {len(hub_files)} writer(s) — skew not spread"
     assert len(all_files) <= 3 * 8, f"{len(all_files)} files — fan-out not bounded"
     assert read_graph(spark, out).triples.count() == 50_000
+    assert_schemas_as_inferred(spark, out)  # incl. the single-column terms frame
 
     # per-partition metrics in graph_meta: rows sum to the table, the
     # skew is visible (hub bucket carries ~95%), bytes/files populated
@@ -383,7 +386,87 @@ def test_write_graph_empty_store(spark, tmp_path):
     empty = spark.createDataFrame([], TRIPLES_SCHEMA)
     out = str(tmp_path / "g0")
     write_graph(empty, empty.select("s").withColumnRenamed("s", "term_id"), out)
-    assert read_graph(spark, out).triples.count() == 0
+    rg = read_graph(spark, out)
+    assert rg.triples.count() == 0
+    # no triples file to infer from: the store opens with the engine
+    # schema plus the partition column; terms still as inferred
+    assert rg.triples.schema == T.StructType(TRIPLES_SCHEMA.fields + [T.StructField("p_bucket", T.IntegerType())])
+    assert rg.terms.schema == spark.read.parquet(f"{out}/terms").schema
+
+
+def assert_schemas_as_inferred(spark, out):
+    """``read_graph`` opens both tables with exactly the schemas parquet
+    inference returns (field order, types, nullability) and reads the
+    same rows."""
+    from inferdf_rs_spark.pipelines.webkg import read_graph
+
+    rg = read_graph(spark, out)
+    for table, df in (("triples", rg.triples), ("terms", rg.terms)):
+        inferred = spark.read.parquet(f"{out}/{table}")
+        assert df.schema == inferred.schema, table
+        assert Counter(df.collect()) == Counter(inferred.collect()), table
+    return rg
+
+
+def _chain(n=4):
+    from inferdf_rs_spark import blank, iri
+
+    return [(blank(f"n{i}"), iri("https://example.org/#next"), blank(f"n{i+1}")) for i in range(n)]
+
+
+def test_read_graph_pinned_schemas_submit_no_job(spark, tmp_path, count_jobs):
+    """``write_graph`` records both schemas in graph_meta.json, so opening a
+    graph — directly or as a snapshot version — submits no Spark job."""
+    from inferdf_rs_spark import build_dataset
+    from inferdf_rs_spark.pipelines.webkg import read_graph, write_graph
+    from inferdf_rs_spark.sources.snapshots import commit_graph, read_graph_version
+
+    ds = build_dataset(spark, _chain())
+    out = str(tmp_path / "g")
+    write_graph(ds.triples, ds.terms, out)
+    commit_graph(ds.triples, ds.terms, str(tmp_path / "snap"))
+    with count_jobs() as jobs:
+        read_graph(spark, out)
+        read_graph_version(spark, str(tmp_path / "snap"))
+    assert jobs.n == 0
+    assert_schemas_as_inferred(spark, out)
+
+
+def test_read_graph_pinned_schema_decimal_ids(spark, tmp_path):
+    from inferdf_rs_spark import build_dataset
+    from inferdf_rs_spark.pipelines.webkg import write_graph
+    from inferdf_rs_spark.terms import id_bits
+
+    out = str(tmp_path / "g128")
+    with id_bits(128):
+        ds = build_dataset(spark, _chain())
+        write_graph(ds.triples, ds.terms, out)
+        rg = assert_schemas_as_inferred(spark, out)
+    assert rg.triples.schema["s"].dataType == T.DecimalType(38, 0)
+    assert rg.terms.schema["term_id"].dataType == T.DecimalType(38, 0)
+    assert sorted(r.s for r in rg.triples.collect()) == sorted(r.s for r in ds.triples.collect())
+
+
+def test_read_graph_meta_without_schemas_infers(spark, tmp_path, count_jobs):
+    """A layout whose graph_meta.json predates the schema keys still opens,
+    through parquet inference, with its partition pruning intact."""
+    import json
+
+    from inferdf_rs_spark import build_dataset
+    from inferdf_rs_spark.pipelines.webkg import read_graph, write_graph
+
+    ds = build_dataset(spark, _chain())
+    out = str(tmp_path / "g")
+    write_graph(ds.triples, ds.terms, out)
+    with open(f"{out}/graph_meta.json") as f:
+        meta = json.load(f)
+    with open(f"{out}/graph_meta.json", "w") as f:
+        json.dump({k: v for k, v in meta.items() if not k.endswith("_schema")}, f)
+    with count_jobs() as jobs:
+        rg = read_graph(spark, out)
+    assert jobs.n > 0  # inference ran
+    assert rg.p_buckets == 16 and rg.n_triples == 4
+    assert_schemas_as_inferred(spark, out)
 
 
 def test_fixpoint_over_materialized_graph(spark, tmp_path):
