@@ -11,7 +11,8 @@ against the (tiny) alias dictionary + a deterministic argmax window
 (score desc, iri asc) — the idiomatic-Spark half of the contract.
 
 Fidelity invariant: ``html_to_text(html)`` must be byte-identical to
-the page's ``text`` column per url (verified by ``verify_fidelity``).
+the page's ``text`` column per url (verified by ``verify_fidelity``,
+and by ``extract_mentions`` on every batch-pipeline and stream run).
 """
 
 from __future__ import annotations
@@ -176,6 +177,22 @@ def make_mention_detector(alias_list: list[str], spark=None):
 
         return detect_none
 
+    def build(match_normed):
+        @F.pandas_udf(T.ArrayType(T.StringType()))
+        def detect(text: pd.Series) -> pd.Series:
+            normed = text.fillna("").str.lower().str.replace(_NORM_RE, " ", regex=True)
+            return match_normed(normed)
+
+        return detect
+
+    return _cached_detector(alias_list, spark, "", build)
+
+
+def _cached_detector(alias_list: list[str], spark, kind: str, build):
+    """The prologue both detector builders share: normalize the
+    vocabulary, pick the physical matcher path, and return the cached
+    UDF for (session, kind, path, vocabulary) — or wrap a fresh matcher
+    with ``build(match_normed)`` and cache that."""
     if spark is None:
         from pyspark.sql import SparkSession
 
@@ -184,7 +201,7 @@ def make_mention_detector(alias_list: list[str], spark=None):
     path = "regex" if len(norm_map) <= REGEX_GAZETTEER_MAX else "trie"
     cache_key = (
         spark.sparkContext.applicationId if spark is not None else None,
-        path,
+        kind + path,
         len(norm_map),
         # hash keys AND values: two vocabularies whose aliases normalize
         # identically but spell differently ('Foo Bar' vs 'Foo-Bar')
@@ -198,14 +215,14 @@ def make_mention_detector(alias_list: list[str], spark=None):
         return cached[0]
 
     match_normed, bc = _make_normed_matcher(spark, norm_map, path)
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def detect(text: pd.Series) -> pd.Series:
-        normed = text.fillna("").str.lower().str.replace(_NORM_RE, " ", regex=True)
-        return match_normed(normed)
-
-    _cache_detector(cache_key, detect, bc)
-    return detect
+    detector = build(match_normed)
+    if len(_DETECTOR_CACHE) >= 8:
+        for _, old_bc in _DETECTOR_CACHE.values():
+            if old_bc is not None:
+                old_bc.unpersist(False)
+        _DETECTOR_CACHE.clear()
+    _DETECTOR_CACHE[cache_key] = (detector, bc)
+    return detector
 
 
 def _make_normed_matcher(spark, norm_map: dict[str, str], path: str):
@@ -244,60 +261,71 @@ def _make_normed_matcher(spark, norm_map: dict[str, str], path: str):
     return match_normed, bc
 
 
-def _cache_detector(cache_key, detector, bc) -> None:
-    if len(_DETECTOR_CACHE) >= 8:
-        for _, old_bc in _DETECTOR_CACHE.values():
-            if old_bc is not None:
-                old_bc.unpersist(False)
-        _DETECTOR_CACHE.clear()
-    _DETECTOR_CACHE[cache_key] = (detector, bc)
-
-
 def make_fused_extract_detect(alias_list: list[str], spark=None):
     """One Arrow pass: html → text-strip → fidelity bit → normalized
     mention detection, returning ``struct<surfaces:array<string>,
     fid_ok:boolean>``.
 
-    The pipeline fast path (``webkg.run_pipeline``): the extracted text
-    itself never leaves the Python worker — only the (tiny) surface
-    list and the fidelity bit cross Arrow and enter the storage pool.
-    The unfused shape (extract_text → persist extracted_text → detect
-    UDF) moves the full text through Arrow twice AND through the block
-    store once; at 2M pages that made the extract stage
-    memory-bandwidth-bound (stage scaling efficiency 0.446 at 8→32
-    cores on one socket) while the matcher itself is CPU-bound and
-    scales ~4x.  Semantics are IDENTICAL to extract_text +
-    make_mention_detector + eqNullSafe fidelity (parity-tested:
-    tests/test_webkg.py::test_fused_extract_detect_parity); the
-    matching core is shared (``_make_normed_matcher``)."""
-    if spark is None:
-        from pyspark.sql import SparkSession
+    The kernel of ``extract_mentions``: the extracted text itself never
+    leaves the Python worker — only the (tiny) surface list and the
+    fidelity bit cross Arrow and enter the storage pool.  An unfused
+    shape (extract_text → persist extracted_text → detect UDF) moves the
+    full text through Arrow twice AND through the block store once; at
+    2M pages that made the extract stage memory-bandwidth-bound (stage
+    scaling efficiency 0.446 at 8→32 cores on one socket) while the
+    matcher itself is CPU-bound and scales ~4x.  Semantics are IDENTICAL
+    to extract_text + make_mention_detector + eqNullSafe fidelity
+    (parity-tested: tests/test_webkg.py::test_fused_extract_detect_parity);
+    the matching core is shared (``_make_normed_matcher``)."""
 
-        spark = SparkSession.getActiveSession()
-    norm_map = _norm_alias_map(alias_list)
-    path = "regex" if len(norm_map) <= REGEX_GAZETTEER_MAX else "trie"
-    cache_key = (
-        spark.sparkContext.applicationId if spark is not None else None,
-        "fused:" + path,
-        len(norm_map),
-        hash(tuple(sorted(norm_map.items()))),
+    def build(match_normed):
+        @F.pandas_udf("surfaces array<string>, fid_ok boolean")
+        def fused(html_str: pd.Series, text: pd.Series) -> pd.DataFrame:
+            extracted = html_str.map(_strip_html)  # never null ("" for null html)
+            # eqNullSafe parity: extracted is non-null, so null text ⇒ False
+            fid_ok = extracted.eq(text).fillna(False)
+            normed = extracted.str.lower().str.replace(_NORM_RE, " ", regex=True)
+            return pd.DataFrame({"surfaces": match_normed(normed), "fid_ok": fid_ok})
+
+        return fused
+
+    return _cached_detector(alias_list, spark, "fused:", build)
+
+
+def extract_mentions(
+    pages: DataFrame, aliases: list[str], spark, skip_fidelity: bool = False
+) -> tuple[DataFrame, int, int]:
+    """The extraction stage of both the batch pipeline and the stream:
+    one ``make_fused_extract_detect`` pass per page, then one aggregate
+    for the page and fidelity-violation counts.  Only the slim result
+    ``(url, lang, surfaces, _fid_ok)`` is persisted (~0.1KB/page; caching
+    raw html+text costs 3.5KB/page, measured 84s vs 31s at 2M pages).
+
+    Returns ``(persisted frame, n_pages, n_violations)``; the caller
+    unpersists the frame.  Violations raise (after releasing the frame)
+    unless ``skip_fidelity``, which still reports the measured count."""
+    det = make_fused_extract_detect(aliases, spark=spark)
+    out = (
+        pages.select(
+            "url", "lang", det(F.decode(F.col("html"), "utf-8"), F.col("text")).alias("_ex")
+        )
+        .select(
+            "url",
+            "lang",
+            F.col("_ex.surfaces").alias("surfaces"),
+            F.col("_ex.fid_ok").alias("_fid_ok"),
+        )
+        .persist()
     )
-    cached = _DETECTOR_CACHE.get(cache_key)
-    if cached is not None:
-        return cached[0]
-
-    match_normed, bc = _make_normed_matcher(spark, norm_map, path)
-
-    @F.pandas_udf("surfaces array<string>, fid_ok boolean")
-    def fused(html_str: pd.Series, text: pd.Series) -> pd.DataFrame:
-        extracted = html_str.map(_strip_html)  # never null ("" for null html)
-        # eqNullSafe parity: extracted is non-null, so null text ⇒ False
-        fid_ok = extracted.eq(text).fillna(False)
-        normed = extracted.str.lower().str.replace(_NORM_RE, " ", regex=True)
-        return pd.DataFrame({"surfaces": match_normed(normed), "fid_ok": fid_ok})
-
-    _cache_detector(cache_key, fused, bc)
-    return fused
+    stats = out.agg(
+        F.count("*").alias("n"),
+        F.sum(F.when(F.col("_fid_ok"), 0).otherwise(1)).alias("bad"),
+    ).collect()[0]
+    bad = int(stats.bad or 0)
+    if bad and not skip_fidelity:
+        out.unpersist()
+        raise RuntimeError(f"extraction fidelity violated on {bad} urls")
+    return out, stats.n, bad
 
 
 def best_links(alias_dict: DataFrame) -> DataFrame:
@@ -344,6 +372,13 @@ def link_mentions(
     mentions = pages.select(
         "url", F.explode(detect(F.col(text_col))).alias("surface")
     )
+    return link_surfaces(mentions, alias_dict)
+
+
+def link_surfaces(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """Link ``(url, surface)`` mentions to their best-scoring entity by a
+    broadcast join to the pre-argmaxed alias dictionary (no shuffle of
+    the mention table).  Returns (url, surface, iri, score)."""
     dim = best_links(alias_dict)
     return mentions.join(
         F.broadcast(dim), mentions.surface == dim["alias"], "inner"

@@ -393,11 +393,6 @@ def fixpoint(
             out = out.unionByName(pc)
         return out
 
-    import sys
-    import time as _time
-
-    debug_timing = os.environ.get("INFERDF_DEBUG_TIMING") == "1"
-
     rnd = start_round
     last_new = 0
     # blocks kept alive one extra round because the delta still reads
@@ -414,7 +409,6 @@ def fixpoint(
     while rnd < max_rounds:
         rnd += 1
         scan_store = store_union()
-        _t0 = _time.perf_counter()
         active = _dispatch_rules(rules, const_ids, delta, delta_ps)
         c = _deduce_round(spark, scan_store, terms, active, const_ids, delta, rnd, functions)
 
@@ -523,11 +517,6 @@ def fixpoint(
         delta_ps = {(r.p, r.sign) for r in stats["dps"]}
         last_new = n_new
         new_full = _attach_lineage(new, rnd)
-        if debug_timing:
-            sys.stderr.write(
-                f"[fixpoint] round={rnd} new={n_new} rules={[i for i, _ in active]} "
-                f"deduce+anti+ckpt={_time.perf_counter() - _t0:.2f}s\n"
-            )
 
         # static rule analysis: skip side-channel actions (term minting,
         # Eq/True accumulation) when no active rule can produce them —

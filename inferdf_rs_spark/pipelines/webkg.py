@@ -24,7 +24,12 @@ from pyspark.sql import types as T
 from ..encode import dedup_triples, encode_edges, term_rows
 from ..engine import Dataset, System
 from ..extraction import synth
-from ..extraction.extract import extract_text, link_mentions
+from ..extraction.extract import (
+    collect_alias_vocabulary,
+    extract_mentions,
+    link_mentions,
+    link_surfaces,
+)
 from ..operators.fixpoint import FixpointResult
 from ..rules import iri, pat, rule, stmt_triple, v
 from ..schemas import KIND_IRI, KIND_LITERAL, RDF_TYPE, XSD_STRING
@@ -82,16 +87,12 @@ def stated_edges(
     callers (bench iterations, streaming micro-batches) collect the
     dictionary once instead of once per call.
     ``surfaces_col``: if the pages frame already carries detected
-    mention surfaces (the fused extract+detect fast path), link straight
-    from that column — no second detection pass."""
+    mention surfaces (``extract_mentions``' output), link straight from
+    that column — no second detection pass."""
     if surfaces_col is not None:
-        from ..extraction.extract import best_links
-
-        mentions = pages.select("url", F.explode(F.col(surfaces_col)).alias("surface"))
-        dim = best_links(alias_dict)
-        linked = mentions.join(
-            F.broadcast(dim), mentions.surface == dim["alias"], "inner"
-        ).select("url", "surface", "iri", "score")
+        linked = link_surfaces(
+            pages.select("url", F.explode(F.col(surfaces_col)).alias("surface")), alias_dict
+        )
     else:
         linked = link_mentions(pages, alias_dict, text_col=text_col, aliases=aliases)
     null_s = F.lit(None).cast("string")
@@ -169,7 +170,6 @@ def run_pipeline(
     audit_dictionary: bool = False,
     static_terms: DataFrame | None = None,
     aliases: list[str] | None = None,
-    fused_extract: bool = True,
     snapshots: bool = False,
     dedup_pages: bool = False,
 ) -> PipelineResult:
@@ -197,64 +197,13 @@ def run_pipeline(
         synth.entity_types(spark),
         synth.sameas_seed(spark),
     )
-    if fused_extract:
-        # ONE fused Arrow pass per page: html→text strip, byte-fidelity
-        # bit, and normalized mention detection — the extracted text never
-        # leaves the Python worker.  Persist ONLY the slim result (url,
-        # lang, surfaces, fidelity bit, ~0.1KB/page): the unfused shape
-        # caches the full extracted_text (~1.2KB/page) and ships it
-        # through Arrow a second time for detection.  Caching raw
-        # html+text would be worse still (3.5KB/page; measured 84s vs 31s
-        # at 2M pages).
-        from ..extraction.extract import collect_alias_vocabulary, make_fused_extract_detect
-
-        if aliases is None:
-            aliases = collect_alias_vocabulary(alias_d)
-        det = make_fused_extract_detect(aliases, spark=spark)
-        pages = (
-            pages.select(
-                "url", "lang", det(F.decode(F.col("html"), "utf-8"), F.col("text")).alias("_ex")
-            )
-            .select(
-                "url",
-                "lang",
-                F.col("_ex.surfaces").alias("surfaces"),
-                F.col("_ex.fid_ok").alias("_fid_ok"),
-            )
-            .persist()
-        )
-    else:
-        # unfused A/B reference path: extract UDF + JVM fidelity bit,
-        # detection deferred to the linking stage over the cached text
-        pages = (
-            extract_text(pages)
-            .select(
-                "url",
-                "lang",
-                "extracted_text",
-                F.col("extracted_text").eqNullSafe(F.col("text")).alias("_fid_ok"),
-            )
-            .persist()
-        )
-    stats = pages.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("_fid_ok"), 0).otherwise(1)).alias("bad"),
-    ).collect()[0]
-    n_pages, fid = stats.n, (0 if skip_fidelity else int(stats.bad or 0))
-    if fid:
-        raise RuntimeError(f"extraction fidelity violated on {fid} urls")
+    if aliases is None:
+        aliases = collect_alias_vocabulary(alias_d)
+    pages, n_pages, fid = extract_mentions(pages, aliases, spark, skip_fidelity=skip_fidelity)
     timings["extract_verify"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    edges = stated_edges(
-        spark,
-        pages,
-        alias_d,
-        etypes,
-        sameas,
-        aliases=aliases,
-        surfaces_col="surfaces" if fused_extract else None,
-    )
+    edges = stated_edges(spark, pages, alias_d, etypes, sameas, surfaces_col="surfaces")
     # dictionary from its natural sources instead of a distinct over the
     # 3x-projected edge table: urls are unique per page (no shuffle),
     # predicates/entities/types are batch-invariant (precomputable via

@@ -168,11 +168,17 @@ def stream_pages_to_graph(
 ):
     """Wire a file-source page stream through extraction+linking into the
     incremental graph.  Returns (query, StreamingGraph); caller drives
-    with ``query.processAllAvailable()`` (tests) or awaits termination."""
+    with ``query.processAllAvailable()`` (tests) or awaits termination.
+
+    Each micro-batch runs the batch pipeline's extraction stage
+    (``extract_mentions``: the fused extract+detect kernel and its
+    fidelity gate — a violating page fails the batch).  The alias
+    vocabulary is collected once, before the stream starts."""
+    from ..extraction.extract import collect_alias_vocabulary, extract_mentions
     from ..pipelines.webkg import stated_edges
-    from ..extraction.extract import extract_text
 
     sg = StreamingGraph(spark, system, out_dir)
+    aliases = collect_alias_vocabulary(alias_dict)
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
@@ -181,8 +187,8 @@ def stream_pages_to_graph(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        pages = extract_text(batch_df).persist()
-        edges = stated_edges(spark, pages, alias_dict, entity_types, sameas)
+        pages, _, _ = extract_mentions(batch_df, aliases, spark)
+        edges = stated_edges(spark, pages, alias_dict, entity_types, sameas, surfaces_col="surfaces")
         sg.process_batch(edges, epoch_id)
         pages.unpersist()
 

@@ -450,6 +450,81 @@ def test_streaming_incremental_graph(spark, tmp_path):
     all_pages.unpersist()
 
 
+def _start_page_stream(spark, pages_dir, out_dir, checkpoint):
+    from inferdf_rs_spark.extraction import synth
+    from inferdf_rs_spark.pipelines import webkg
+    from inferdf_rs_spark.streaming.ingest import stream_pages_to_graph
+
+    return stream_pages_to_graph(
+        spark,
+        System(spark, webkg.web_rules()),
+        pages_dir,
+        out_dir,
+        synth.alias_dict(spark),
+        synth.entity_types(spark),
+        synth.sameas_seed(spark),
+        checkpoint=checkpoint,
+    )
+
+
+def test_streaming_fidelity_violation_fails_batch(spark, tmp_path):
+    """A micro-batch holding a page whose ``text`` is not its stripped
+    ``html`` fails the stream, as it fails the batch pipeline."""
+    from pyspark.sql import functions as F
+
+    from inferdf_rs_spark.extraction import synth
+
+    pages_dir = str(tmp_path / "pages")
+    pages = synth.synth_pages(spark, 6)
+    tampered = F.col("url") == "https://example.org/page/3"
+    pages.withColumn(
+        "text", F.when(tampered, F.concat("text", F.lit(" tampered"))).otherwise(F.col("text"))
+    ).write.parquet(pages_dir)
+
+    q, sg = _start_page_stream(spark, pages_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    try:
+        with pytest.raises(Exception, match="extraction fidelity violated on 1 urls"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sg.batches == 0
+
+
+def test_streaming_collects_alias_vocabulary_once(spark, tmp_path, monkeypatch):
+    """The stream collects the alias vocabulary once, not once per
+    micro-batch.  One page file per micro-batch: the file source is held
+    to one file per trigger so the stream runs two batches."""
+    from pyspark.sql.streaming.readwriter import DataStreamReader
+
+    from inferdf_rs_spark.extraction import extract, synth
+
+    pages_dir = str(tmp_path / "pages")
+    pages = synth.synth_pages(spark, 20)
+    pages.filter("url like '%/1_'").coalesce(1).write.parquet(pages_dir + "/b1")
+    pages.filter("url like '%/_'").coalesce(1).write.parquet(pages_dir + "/b2")
+
+    calls = []
+    collect = extract.collect_alias_vocabulary
+    monkeypatch.setattr(
+        extract, "collect_alias_vocabulary", lambda d: calls.append(1) or collect(d)
+    )
+    parquet = DataStreamReader.parquet
+    monkeypatch.setattr(
+        DataStreamReader,
+        "parquet",
+        lambda self, path: parquet(self.option("maxFilesPerTrigger", 1), path),
+    )
+
+    q, sg = _start_page_stream(
+        spark, pages_dir + "/*", str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert sg.batches == 2
+    assert len(calls) == 1
+    sg._tracker.release()
+
+
 def test_auto_lsh_params_probes_override_and_clamp_warning():
     """ADVICE r4 pair: (a) a no-probe caller (exact code match — Hamming
     radius 0, the embedding near-dup path) passes ``probes=1`` and gets

@@ -4,6 +4,7 @@ entity linking, and a golden P/R harness over the synthesized pages."""
 import itertools
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -216,6 +217,20 @@ def test_pipeline_golden_pr(spark, tmp_path):
     ent = ds.triples.filter(F.col("cause_kind") == 1)
     assert ent.filter(F.col("rule_id").isNull()).count() == 0
     assert ent.agg(F.min("round")).collect()[0][0] >= 1
+
+
+def test_pipeline_reports_fidelity_violations(spark):
+    """One page whose ``text`` is not its stripped ``html``: counted under
+    ``skip_fidelity``, fatal without it."""
+    pages = synth.synth_pages(spark, 10)
+    tampered = F.col("url") == "https://example.org/page/3"
+    pages = pages.withColumn(
+        "text", F.when(tampered, F.concat("text", F.lit(" tampered"))).otherwise(F.col("text"))
+    )
+    pr = webkg.run_pipeline(spark, pages, skip_fidelity=True)
+    assert (pr.fidelity_violations, pr.n_pages) == (1, 10)
+    with pytest.raises(RuntimeError, match="extraction fidelity violated on 1 urls"):
+        webkg.run_pipeline(spark, pages)
 
 
 def test_materialized_graph_p_bound_scan_prunes_partitions(spark, tmp_path):
