@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.expr import CV, _nulls
+from ..operators.expr import CV, _first_err, _nulls
 from ..schemas import ERR_NONE, VT_BOOL, VT_DECIMAL, VT_STRING
 
 
@@ -35,11 +35,12 @@ def fn_strlen(comp, args) -> CV:
 
 def fn_concat(comp, args) -> CV:
     """(concat a b ...) — string concatenation of lexical forms."""
-    parts, err = [], F.lit(ERR_NONE)
+    parts, errs = [], []
     for a in args:
         s, e = comp._require_any_literal(a)
         parts.append(s)
-        err = F.when(err != ERR_NONE, err).otherwise(e)
+        errs.append(e)
+    err = _first_err(errs)
     base = _nulls()
     base["s"] = F.when(err == ERR_NONE, F.concat(*parts))
     base["err"] = err
@@ -51,7 +52,7 @@ def fn_starts_with(comp, args) -> CV:
     p, x = args
     ps, pe = comp._require_any_literal(p)
     xs, xe = comp._require_any_literal(x)
-    err = F.when(pe != ERR_NONE, pe).otherwise(xe)
+    err = _first_err([pe, xe])
     return _bool_result(F.startswith(xs, ps), err)
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..rules import EqStmt, Rule, TripleStmt, TrueStmt
 from ..schemas import CAUSE_ENTAILED, ERR_NONE, KIND_BLANK, VT_ANY
-from .expr import ExprCompiler, join_facets, statement_facet_vars
+from .expr import ExprCompiler, _first_err, join_facets, statement_facet_vars
 
 EQS_COLS = ["a", "b", "sign", "rule_id", "subst_hash"]
 TRUES_COLS = ["res", "vtype", "bval", "verr", "sign", "rule_id", "subst_hash"]
@@ -45,10 +45,7 @@ def _fold_errs(cols) -> tuple["F.Column", bool]:
     errs = [c for c in cols if str(c) != trivial]
     if not errs:
         return F.lit(ERR_NONE), True
-    out = errs[0]
-    for c in errs[1:]:
-        out = F.when(out != ERR_NONE, out).otherwise(c)
-    return out, False
+    return _first_err(errs), False
 
 
 @dataclass

@@ -20,6 +20,11 @@ Errors (InvalidLiteral / AmbiguousLiteral / Unexpected,
 src/expression/mod.rs:222-235) are carried as an ``err`` column and
 surfaced by the caller (deduction raises, validation reports).
 
+Size: every n-ary fold (first error, or/and, chained compare) is one
+``coalesce`` over per-argument steps, so compiled size is linear in the
+argument count, with a bounded factor per nesting level (a parent reads
+a child call's ``b``/``err`` a constant number of times).
+
 Regex dialect: evaluated with Spark's JVM regex (``regexp_like``); the
 reference uses the Rust ``regex`` crate.  Rules must stay in the common
 subset (no backreferences / lookaround — Rust has neither, so any rule
@@ -28,6 +33,7 @@ valid for the reference is valid here except for exotic escapes).
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -85,12 +91,40 @@ def _nulls():
     )
 
 
+_ORDER = {"lt": operator.lt, "gt": operator.gt, "leq": operator.le, "geq": operator.ge}
+
+# Fold code that settles a call without an error: an or/and argument was
+# decisive, or a chained compare met a false pair.  Below every error code.
+_SETTLED = -1
+
+
+def _step(err: Column) -> Column:
+    """An error column as a fold step: null while there is no error."""
+    return F.nullif(err, F.lit(ERR_NONE))
+
+
 def _first_err(errs: list[Column]) -> Column:
-    """First-error-wins fold over error columns (arg-order precedence)."""
-    out = F.lit(ERR_NONE)
-    for e in errs:
-        out = F.when(out != ERR_NONE, out).otherwise(e)
-    return out
+    """First-error-wins fold over error columns (arg-order precedence).
+
+    One ``coalesce(nullif(e1, 0), …, nullif(en, 0), 0)``: each column
+    enters the expression once, so its size is linear in ``len(errs)``.
+    (Catalyst trees share no subtrees: a ``when(out != 0, out)`` fold
+    copies the running state at every step and grows exponentially.)"""
+    if len(errs) <= 1:
+        return errs[0] if errs else F.lit(ERR_NONE)
+    return F.coalesce(*[_step(e) for e in errs], F.lit(ERR_NONE))
+
+
+def _settle(steps: list[Column], settled: bool) -> tuple[Column, Column]:
+    """Short-circuit fold as one ``coalesce``: the first non-null step
+    settles the call, either with an error code or with ``_SETTLED``;
+    running out of steps leaves ``ERR_NONE``.  Returns ``(b, err)``, both
+    read from that single code: ``b`` is ``settled`` on ``_SETTLED``,
+    ``not settled`` on ``ERR_NONE`` and null on an error."""
+    code = F.coalesce(*steps, F.lit(ERR_NONE))
+    # get() is null past the array's end, i.e. for every error code
+    b = F.get(F.array(F.lit(settled), F.lit(not settled)), code - _SETTLED)
+    return b, F.greatest(code, F.lit(ERR_NONE))
 
 
 def decimal_lexical(d: Column) -> Column:
@@ -114,10 +148,18 @@ class ExprCompiler:
         self.const_ids = const_ids
         self.facet_vars = facet_vars
         self.functions = functions or {}
+        # Columns are immutable: a node repeated in a rule compiles once
+        self._compiled: dict = {}
 
     # -- value construction ------------------------------------------------
 
     def compile(self, e) -> CV:
+        cv = self._compiled.get(e)
+        if cv is None:
+            cv = self._compiled[e] = self._compile(e)
+        return cv
+
+    def _compile(self, e) -> CV:
         if isinstance(e, Var):
             return self._var(e.index)
         if isinstance(e, Term):
@@ -257,17 +299,15 @@ class ExprCompiler:
         same = a.vtype == b.vtype
         both_dec = same & (a.vtype == VT_DECIMAL)
         both_str = same & (a.vtype == VT_STRING)
-        # Any/Boolean compare ordered-equal only when equal (partial_cmp)
-        refl = (same & (a.vtype == VT_ANY) & (a.res == b.res)) | (
-            same & (a.vtype == VT_BOOL) & (a.b == b.b)
-        )
-        strict = {"lt": (a.d < b.d, a.s < b.s), "gt": (a.d > b.d, a.s > b.s)}
-        loose = {"leq": (a.d <= b.d, a.s <= b.s), "geq": (a.d >= b.d, a.s >= b.s)}
-        if op in strict:
-            dcmp, scmp = strict[op]
-            return F.when(both_dec, dcmp).when(both_str, scmp).otherwise(F.lit(False))
-        dcmp, scmp = loose[op]
-        return F.when(both_dec, dcmp).when(both_str, scmp).when(refl, F.lit(True)).otherwise(F.lit(False))
+        order = _ORDER[op]
+        out = F.when(both_dec, order(a.d, b.d)).when(both_str, order(a.s, b.s))
+        if op in ("leq", "geq"):
+            # Any/Boolean compare ordered-equal only when equal (partial_cmp)
+            refl = (same & (a.vtype == VT_ANY) & (a.res == b.res)) | (
+                same & (a.vtype == VT_BOOL) & (a.b == b.b)
+            )
+            out = out.when(refl, F.lit(True))
+        return out.otherwise(F.lit(False))
 
     # -- calls ---------------------------------------------------------------
 
@@ -282,29 +322,25 @@ class ExprCompiler:
             # arg order), while require_boolean COERCION errors — wrong
             # value space, resource facet parse — arise inside the call
             # loop and ARE masked by an earlier decisive argument.
-            eval_err = _first_err(
-                [a.err for a, node in zip(args, c.args) if isinstance(node, Call)]
-            )
+            # The fold is one coalesce over per-argument steps (_settle):
+            # every nested call's eval error first, then per argument its
+            # coercion error or _SETTLED when it is decisive.  Each
+            # argument's columns enter a constant number of times, so the
+            # compiled size is linear in the argument count.
             decisive_val = c.fn == "or"  # Or stops at true, And at false
-            state_done = F.lit(False)  # decided early
-            state_err = F.lit(ERR_NONE)
+            steps = [_step(a.err) for a, node in zip(args, c.args) if isinstance(node, Call)]
             for a, node in zip(args, c.args):
-                bv, be = self._require_boolean(a)
                 if isinstance(node, Call):
-                    # its eval error is already counted (unmaskable);
-                    # only the coercion part stays maskable here
-                    be = F.when(a.err != ERR_NONE, F.lit(ERR_NONE)).otherwise(be)
-                new_err = F.when(state_done | (state_err != ERR_NONE), state_err).otherwise(be)
-                hit = (~state_done) & (state_err == ERR_NONE) & (new_err == ERR_NONE) & (
-                    F.coalesce(bv, F.lit(False)) == F.lit(decisive_val)
-                )
-                state_done = state_done | hit
-                state_err = new_err
-            state_err = F.when(eval_err != ERR_NONE, eval_err).otherwise(state_err)
-            result = state_done if decisive_val else ~state_done
+                    # its eval error is already counted (unmaskable); the
+                    # maskable coercion part is the value-space check alone
+                    bv = a.b
+                    be = F.when(a.vtype != VT_BOOL, F.lit(ERR_UNEXPECTED))
+                else:
+                    bv, be = self._require_boolean(a)
+                    be = _step(be)
+                steps += [be, F.when(bv == F.lit(decisive_val), F.lit(_SETTLED))]
             # an error voids the result entirely
-            base["b"] = F.when(state_err == ERR_NONE, result)
-            base["err"] = state_err
+            base["b"], base["err"] = _settle(steps, decisive_val)
             return CV(vtype=F.lit(VT_BOOL), is_resource=False, **base)
 
         if c.fn in ("eq", "ne", "lt", "leq", "gt", "geq"):
@@ -324,21 +360,18 @@ class ExprCompiler:
             #    Ok(false) (loop stops at the false pair), while
             #    ``(lt <ambiguous>)`` and ``(lt 2 <ambiguous>)`` are
             #    errors (those args are reached before any false pair).
-            err = F.lit(ERR_NONE)
-            for a in args:
-                if not a.is_resource:
-                    err = F.when(err != ERR_NONE, err).otherwise(a.err)
-            state_false = F.lit(False)  # some earlier pair compared false
+            #
+            # One coalesce (_settle) over: the eval errors, then in arg
+            # order each resource arg's conversion error and _SETTLED for
+            # each pair that compares false — linear in the arg count.
+            steps = [_step(a.err) for a in args if not a.is_resource]
             for k, a in enumerate(args):
                 if a.is_resource:
-                    err = F.when(err != ERR_NONE, err).otherwise(
-                        F.when(~state_false, a.err).otherwise(F.lit(ERR_NONE))
-                    )
+                    steps.append(_step(a.err))
                 if k >= 1:
                     pair_ok = F.coalesce(self._cmp(c.fn, args[k - 1], a), F.lit(False))
-                    state_false = state_false | ((err == ERR_NONE) & ~pair_ok)
-            base["b"] = F.when(err == ERR_NONE, ~state_false)
-            base["err"] = err
+                    steps.append(F.when(~pair_ok, F.lit(_SETTLED)))
+            base["b"], base["err"] = _settle(steps, False)  # a false pair settles to false
             return CV(vtype=F.lit(VT_BOOL), is_resource=False, **base)
 
         if c.fn == "matches":
@@ -346,7 +379,7 @@ class ExprCompiler:
                 raise ValueError(f"matches expects 2 args, got {len(args)}")
             rx, rx_err = self._require_regex(args[0])
             hay, hay_err = self._require_any_literal(args[1])
-            err = F.when(rx_err != ERR_NONE, rx_err).otherwise(hay_err)
+            err = _first_err([rx_err, hay_err])
             base["b"] = F.when(err == ERR_NONE, F.regexp_like(hay, rx))
             base["err"] = err
             return CV(vtype=F.lit(VT_BOOL), is_resource=False, **base)

@@ -407,6 +407,31 @@ def test_require_any_literal_ignores_facet_parse_errors(spark):
     assert System(spark, [r]).validate(ds).is_valid()
 
 
+def test_flat_call_compiled_size_linear(spark):
+    # Compiled expression size is linear in argument count: from the 3rd
+    # argument on, every argument of a flat n-ary call adds the same
+    # number of characters of Column text.  n walks upward and the test
+    # stops at the first super-linear step, so a fold that re-inlines its
+    # running state fails here by assertion long before it exhausts the
+    # driver heap (a 12-argument `or` used to, inside compile).
+    from inferdf_rs_spark.functions import DEFAULT_FUNCTIONS
+    from inferdf_rs_spark.operators.expr import ExprCompiler
+
+    comp = ExprCompiler({}, facet_vars={0}, functions=DEFAULT_FUNCTIONS)
+
+    def size(fn, n):
+        cv = comp.compile(call(fn, *[v(0)] * n))
+        return sum(len(str(c)) for c in vars(cv).values() if not isinstance(c, bool))
+
+    for fn in ("or", "and", "eq", "ne", "lt", "leq", "gt", "geq", "concat"):
+        prev, step = size(fn, 2), None
+        for n in range(3, 17):
+            cur = size(fn, n)
+            step = cur - prev if step is None else step
+            assert cur - prev == step, f"({fn} ×{n}) adds {cur - prev} chars, the 3rd arg added {step}"
+            prev = cur
+
+
 def test_malformed_decimal_literal_rejected_at_load():
     from inferdf_rs_spark.rules import call, dec, stmt_true
 
