@@ -19,6 +19,7 @@ from .operators.match import find_substitutions
 from .operators.validate import ValidationResult, validate
 from .rules import Rule, load_rules, rule_to_json
 from .schemas import CAUSE_STATED
+from .session import local_frame
 from .terms import Term, encode_terms, resource_facets, terms_df, triples_schema
 
 
@@ -68,7 +69,7 @@ def build_dataset(spark: SparkSession, facts: list) -> Dataset:
         )
         for s, p, o, sign, g in norm
     ]
-    trips = spark.createDataFrame(rows, triples_schema())
+    trips = local_frame(spark, rows, triples_schema())
     return Dataset(trips, tdf)
 
 

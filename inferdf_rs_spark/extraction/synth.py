@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 ENT = "https://example.org/entity/"
 TYPE = "https://example.org/type/"
 
@@ -94,15 +96,15 @@ LANGS = ["en", "fr", "de", "es", "zh"]
 
 
 def alias_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ALIAS_ROWS, "alias string, iri string, score double")
+    return local_frame(spark, ALIAS_ROWS, "alias string, iri string, score double")
 
 
 def entity_types(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(ENTITY_TYPES.items()), "iri string, type string")
+    return local_frame(spark, ENTITY_TYPES.items(), "iri string, type string")
 
 
 def sameas_seed(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SAMEAS_SEED, "a string, b string")
+    return local_frame(spark, SAMEAS_SEED, "a string, b string")
 
 
 def synth_pages(

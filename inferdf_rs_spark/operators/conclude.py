@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..rules import EqStmt, Rule, TripleStmt, TrueStmt
 from ..schemas import CAUSE_ENTAILED, ERR_NONE, KIND_BLANK, VT_ANY
+from ..session import local_frame
 from .expr import ExprCompiler, _first_err, join_facets, statement_facet_vars
 
 EQS_COLS = ["a", "b", "sign", "rule_id", "subst_hash"]
@@ -60,29 +61,23 @@ class Concluded:
 
 
 def _empty(spark, schema) -> DataFrame:
-    """Session-cached empty frame: ``createDataFrame([], schema)`` costs
-    ~10 ms of driver round-trips, and loop operators (fixpoint, retract)
-    request the same empty schemas every round.  DataFrames are
-    immutable, so one instance per (session, schema) serves all callers;
-    the cache dies with the session object."""
+    """Session-cached empty frame: building one costs ~10 ms of driver
+    round-trips, and loop operators (fixpoint, retract) request the same
+    empty schemas every round.  DataFrames are immutable, so one
+    instance per (session, schema) serves all callers; the cache dies
+    with the session object.  The frame is an empty ``LocalRelation``,
+    which the optimizer propagates through unions/joins statically."""
     cache = getattr(spark, "_inferdf_empty_cache", None)
     if cache is None:
         cache = {}
         try:
             spark._inferdf_empty_cache = cache
         except AttributeError:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
     key = schema if isinstance(schema, str) else str(schema)
     df = cache.get(key)
     if df is None:
-        # .limit(0): a bare createDataFrame([], schema) is an RDD-backed
-        # empty (defaultParallelism empty partitions) that the optimizer
-        # cannot prove empty — an incremental limit(1).collect() probe
-        # over a union containing it burns extra jobs scanning nothing.
-        # LIMIT 0 folds to an empty LocalRelation (OptimizeLimitZero),
-        # which then propagates through unions/joins statically.
-        df = spark.createDataFrame([], schema).limit(0)
-        cache[key] = df
+        df = cache[key] = local_frame(spark, [], schema)
     return df
 
 

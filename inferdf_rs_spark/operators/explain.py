@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..caches import CheckpointTracker
 from ..rules import Rule, TripleStmt, Var
 from ..schemas import CAUSE_ENTAILED, CAUSE_STATED
+from ..session import local_frame
 from ..terms import Term
 from .match import _build_scan, _join_bindings, find_substitutions
 
@@ -373,7 +374,8 @@ def stated_support(
                 "lineage from this rule system?"
             )
         if not leaves:
-            out = spark.createDataFrame(
+            out = local_frame(
+                spark,
                 [],
                 "s long, p long, o long, sign boolean, "
                 "ls long, lp long, lo long, lsign boolean",

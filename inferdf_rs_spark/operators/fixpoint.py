@@ -43,7 +43,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import terms as _terms_mod
@@ -410,7 +410,12 @@ def fixpoint(
         rnd += 1
         scan_store = store_union()
         active = _dispatch_rules(rules, const_ids, delta, delta_ps)
-        c = _deduce_round(spark, scan_store, terms, active, const_ids, delta, rnd, functions)
+        # small regime: the store is within the broadcast bound, so the
+        # rule joins broadcast their store-side scans too (the hint passes
+        # through each scan's filter/projection); left to AQE they run as
+        # sort-merge joins until re-planned at run time
+        rule_store = scan_store if large else F.broadcast(scan_store)
+        c = _deduce_round(spark, rule_store, terms, active, const_ids, delta, rnd, functions)
 
         deduced = c.triples if insert_negatives else c.triples.filter(F.col("sign"))
         # dedup BEFORE the anti-join: the groupBy runs a map-side partial
@@ -460,25 +465,15 @@ def fixpoint(
             staged = new.withColumn("err", F.lit(0).cast("int")).unionByName(err_rows)
         else:
             staged = new
-        # one materialization of the round's delta under AQE.  Large
-        # regime: a TRANSIENT persist — the partitioned piece supersedes
-        # it and the copy is released (a leaked copy per round was
-        # measured to thrash the storage pool).  Small regime: the
-        # checkpoint IS the store piece, so it stays.
-        staged_ids: set = set()
-        if large:
-            staged = staged.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        else:
-            staged, staged_ids = tracker.checkpoint(staged)
-
-        # ONE driver action per round for all round stats: new-fact count,
-        # strict-error probe, and the NEXT round's dispatch predicate set
-        # — previously three separate jobs (count + limit(1).collect +
-        # next round's distinct probe).  The aggregate runs over the
-        # checkpointed blocks (small regime) or materializes the persist
-        # (large regime); collect_set is bounded by the delta's distinct
-        # (predicate, sign) count — the same bound the old distinct probe
-        # carried (web-KG predicate vocabularies are small).
+        # ONE driver action per round materializes the delta and all round
+        # stats: new-fact count, strict-error probe, and the NEXT round's
+        # dispatch predicate set (collect_set is bounded by the delta's
+        # distinct (predicate, sign) count; web-KG predicate vocabularies
+        # are small).  Small regime: the stats ride on the checkpoint that
+        # IS the store piece, as an Observation.  Large regime: a
+        # TRANSIENT persist that the aggregate materializes — the
+        # partitioned piece supersedes it and the copy is released (a
+        # leaked copy per round was measured to thrash the storage pool).
         is_fact = (F.col("err") == 0) if check_errors else F.lit(True)
         agg_cols = [
             F.count(F.when(is_fact, 1)).alias("n_new"),
@@ -490,7 +485,14 @@ def fixpoint(
                     F.when(F.col("err") > 0, F.struct("err", "rule_id", "subst_hash"))
                 ).alias("bad")
             )
-        stats = staged.agg(*agg_cols).collect()[0]
+        staged_ids: set = set()
+        if large:
+            staged = staged.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            stats = staged.agg(*agg_cols).collect()[0]
+        else:
+            obs = Observation()
+            staged, staged_ids = tracker.checkpoint(staged.observe(obs, *agg_cols))
+            stats = obs.get
         if check_errors and stats["bad"] is not None:
             # error path: release every cache/checkpoint this run
             # created — a long-running caller that catches
@@ -644,8 +646,8 @@ def load_checkpoint(spark: SparkSession, checkpoint_dir: str):
         )
     store = spark.read.schema(triples_schema()).parquet(os.path.join(checkpoint_dir, "base"))
     terms = spark.read.schema(terms_schema()).parquet(os.path.join(checkpoint_dir, "terms_base"))
-    eqs = spark.createDataFrame([], EQS_SCHEMA)
-    trues = spark.createDataFrame([], TRUES_SCHEMA)
+    eqs = _empty_df(spark, EQS_SCHEMA)
+    trues = _empty_df(spark, TRUES_SCHEMA)
     delta = None
     for k in range(1, meta["round"] + 1):
         d = spark.read.schema(triples_schema()).parquet(os.path.join(checkpoint_dir, f"delta/round={k}"))

@@ -22,6 +22,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import md5_int
 
 
@@ -121,7 +122,8 @@ def resample_to_mix(
     if not pos or W <= 0:
         raise ValueError("resample_to_mix: need at least one positive weight")
     T = min(counts[s] * W // w for s, w in pos.items())
-    plan = docs.sparkSession.createDataFrame(
+    plan = local_frame(
+        docs.sparkSession,
         [(s, W * counts[s], w * T) for s, w in pos.items()],
         f"{source_col} string, _mod long, _thr long",
     )

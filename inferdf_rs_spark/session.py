@@ -19,7 +19,27 @@ os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("ARROW_NUM_THREADS", "1")
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A driver-side table (``rows``: tuples or Rows in ``schema`` field
+    order) as an Arrow-backed ``LocalRelation``.
+
+    ``createDataFrame(list)`` parallelizes the rows into an RDD whose
+    every scan runs Python workers (~300 ms a task for a few rows, even
+    inside a broadcast); an Arrow table plans as ``LocalTableScan``, so
+    collecting or broadcasting it submits no job.  Every frame the engine
+    builds from driver values goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(st.names, r)) for r in rows], schema=to_arrow_schema(st)
+    )
+    return spark.createDataFrame(table, st)
 
 
 def _default_driver_memory() -> str:

@@ -185,9 +185,11 @@ def stream_pages_to_graph(
     )
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        # the stage's own count decides emptiness (no separate probe job)
+        pages, n_pages, _ = extract_mentions(batch_df, aliases, spark)
+        if n_pages == 0:
+            pages.unpersist()
             return
-        pages, _, _ = extract_mentions(batch_df, aliases, spark)
         edges = stated_edges(spark, pages, alias_dict, entity_types, sameas, surfaces_col="surfaces")
         sg.process_batch(edges, epoch_id)
         pages.unpersist()

@@ -51,6 +51,7 @@ from .schemas import (
     XSD_DECIMAL_FAMILY,
     XSD_STRING,
 )
+from .session import local_frame
 from .xxh64 import xxhash64
 
 # sentinel for null datatype/lang inside the hash (never a legal IRI/tag)
@@ -217,13 +218,14 @@ def encode_terms(spark: SparkSession, terms: list[Term]) -> dict[Term, int]:
 def terms_df(spark: SparkSession, terms: list[Term] | dict[Term, int]) -> DataFrame:
     """Build a ``terms`` dimension DataFrame (with ids) from driver-side
     terms, or from an ``encode_terms`` result so its ids are not
-    computed twice.  No Spark job runs."""
+    computed twice.  The frame is a ``LocalRelation``: building or
+    collecting it runs no Spark job."""
     ids = terms if isinstance(terms, dict) else encode_terms(spark, terms)
     rows = [
         (ids[t], t.kind, t.lexical, t.datatype, t.lang)
         for t in sorted(ids, key=lambda t: (t.kind, t.lexical, t.datatype or "", t.lang or ""))
     ]
-    return spark.createDataFrame(rows, terms_schema())
+    return local_frame(spark, rows, terms_schema())
 
 
 def encode_term_batch(df: DataFrame, kind: str = "kind", lexical: str = "lexical", datatype: str = "datatype", lang: str = "lang") -> DataFrame:
@@ -234,7 +236,7 @@ def encode_term_batch(df: DataFrame, kind: str = "kind", lexical: str = "lexical
 
 
 def empty_terms(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], terms_schema())
+    return local_frame(spark, [], terms_schema())
 
 
 def merge_terms(*dfs: DataFrame) -> DataFrame:

@@ -701,14 +701,15 @@ def _tc_rule():
 
 
 def test_fixpoint_round_action_budget(spark, monkeypatch):
-    """Round-5 driver-overhead contract: after setup (input-store persist
-    count + terms checkpoint), a no-minting round costs exactly TWO driver
-    actions — the delta materialization (eager localCheckpoint) and ONE
-    stats aggregate folding n_new, the strict-error probe and the next
-    round's dispatch predicate set.  Previously each round also paid a
-    ``new.count()``, a ``limit(1).collect()`` error probe and the next
-    round's ``distinct().collect()`` dispatch probe — fixed per-round
-    driver cost that a 100-round sameAs closure at web scale pays 100x."""
+    """Driver-overhead contract: after setup (input-store persist count +
+    terms checkpoint), a no-minting small-regime round costs exactly ONE
+    driver action — the delta materialization (eager localCheckpoint),
+    which carries n_new, the strict-error probe and the next round's
+    dispatch predicate set as an Observation.  Earlier rounds paid a
+    separate stats aggregate, and before that a ``new.count()``, a
+    ``limit(1).collect()`` error probe and the next round's
+    ``distinct().collect()`` dispatch probe — fixed per-round driver cost
+    that a 100-round sameAs closure at web scale pays 100x."""
     import pyspark.sql.classic.dataframe as dfmod
 
     chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
@@ -750,8 +751,8 @@ def test_fixpoint_round_action_budget(spark, monkeypatch):
     n_actions = len(actions)
     monkeypatch.undo()
     assert res.store.count() == 17  # 15 anc closure + other + other2
-    # setup = persist-count + terms checkpoint; then 2 actions per round
-    assert n_actions == 2 + 2 * res.rounds, actions
+    # setup = persist-count + terms checkpoint; then 1 action per round
+    assert n_actions == 2 + res.rounds, actions
 
 
 def test_fixpoint_store_rows_metadata_skips_count(spark, monkeypatch):

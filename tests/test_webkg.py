@@ -319,6 +319,52 @@ def test_pipeline_kill_resume_same_signature(spark, tmp_path):
     assert sig_resumed == sig_fresh
 
 
+def test_pipeline_derived_counts_match_store(spark, tmp_path):
+    """``n_stated`` comes from an Observation on the stated-triples
+    checkpoint and ``n_total`` from ``n_stated`` plus each round's new
+    facts; both must equal counts over the result store, on a fresh run,
+    on a resume after a kill and on a rerun of a finished checkpoint."""
+    from inferdf_rs_spark.schemas import CAUSE_STATED
+
+    pages = synth.synth_pages(spark, N_PAGES).localCheckpoint(eager=True)
+
+    def assert_counts(pr):
+        store = pr.result.store
+        assert pr.n_stated == store.filter(F.col("cause_kind") == CAUSE_STATED).count()
+        assert pr.n_total == store.count()
+
+    fresh = webkg.run_pipeline(spark, pages)
+    assert_counts(fresh)
+    ck = str(tmp_path / "ck")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        webkg.run_pipeline(spark, pages, checkpoint_dir=ck, max_rounds=1)
+    resumed = webkg.run_pipeline(spark, pages, checkpoint_dir=ck)
+    assert_counts(resumed)
+    rerun = webkg.run_pipeline(spark, pages, checkpoint_dir=ck)
+    assert_counts(rerun)
+    assert fresh.n_total == resumed.n_total == rerun.n_total
+
+
+def test_small_store_fixpoint_job_count_pinned(spark, count_jobs):
+    """The small-regime fixpoint on the golden fixture submits exactly 28
+    Spark jobs over its 3 rounds, on every run: each round's stats ride
+    on its checkpoint (one action) and every rule join broadcasts its
+    store-side scan, so no join waits on AQE to re-plan a sort-merge
+    join.  A change that cuts jobs lowers this pin."""
+    from inferdf_rs_spark.engine import Dataset
+    from inferdf_rs_spark.schemas import CAUSE_STATED
+
+    pr = webkg.run_pipeline(spark, synth.synth_pages(spark, N_PAGES))
+    stated = pr.result.store.filter(F.col("cause_kind") == CAUSE_STATED).localCheckpoint(eager=True)
+    terms = pr.result.terms.localCheckpoint(eager=True)
+    for _ in range(2):
+        with count_jobs() as jobs:
+            res = webkg.web_system(spark).fixpoint(Dataset(stated, terms, n_triples=pr.n_stated))
+        assert (res.rounds, jobs.n) == (3, 28)
+        assert res.store.count() == pr.n_total
+        res.release()
+
+
 def test_pipeline_dedup_pages_drops_mirrors(spark):
     """dedup_pages=True: mirror urls serving byte-identical html are
     dropped before extraction (keeper = lexicographically smallest url),
