@@ -52,6 +52,7 @@ from ..rules import Rule
 from ..schemas import CAUSE_ENTAILED, TRIPLE_KEY, TERMS_SCHEMA, TRIPLES_SCHEMA
 from ..terms import merge_terms, resource_facets
 from .conclude import Concluded, _empty as _empty_df, conclude, merge_concluded
+from .expr import statement_facet_vars
 from .match import find_substitutions
 
 # the per-round exchanged row: triple key + minimal int lineage.  The
@@ -107,17 +108,38 @@ def _deduce_round(
     delta: DataFrame | None,
     round_num: int,
     functions: dict | None,
+    broadcast_store: bool = False,
 ) -> Concluded:
-    facets = resource_facets(terms)
+    """One deduction round of ``rules`` over ``store``.
+
+    ``broadcast_store``: hint the store side of every rule join as a
+    broadcast.  Only rules with two or more hypothesis patterns get the
+    hint: a single-pattern rule's store scan joins nothing, and a hint
+    there is dropped unused (with a warning) by the planner."""
+    # the facet view is built only for rules whose conclusions read it
+    facets = resource_facets(terms) if any(_reads_facets(r) for _, r in rules) else None
+    hinted = F.broadcast(store) if broadcast_store else store
     batches = []
     for idx, rule in rules:
         # distinct=False: duplicate substitutions (a binding reachable via
         # two delta slots) only duplicate conclusion rows, and those are
         # deduped once on the triple key downstream — one exchange per
         # round instead of one per rule per round
-        subst = find_substitutions(store, rule, const_ids, delta=delta, distinct=False)
+        src = hinted if len(rule.hypothesis) > 1 else store
+        subst = find_substitutions(src, rule, const_ids, delta=delta, distinct=False)
         batches.append(conclude(subst, rule, idx, const_ids, facets, round_num, functions))
     return merge_concluded(spark, batches)
+
+
+def _reads_facets(rule: Rule) -> bool:
+    """Does evaluating this rule's conclusions join the facet view?"""
+    return bool(statement_facet_vars(rule.conclusion.statements))
+
+
+def _is_materialized(df: DataFrame) -> bool:
+    """Is ``df`` a bare checkpoint (its analyzed plan a ``LogicalRDD``)?
+    Scanning one reads stored blocks; it needs no further persist."""
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LogicalRDD"
 
 
 def _slot_can_feed(sp, const_ids: dict, pos_ps: set, neg_ps: set) -> bool:
@@ -362,6 +384,11 @@ def fixpoint(
         if large:
             pc0, ids0 = _piece(store, big=True)
             pieces, piece_idsets = [pc0], [ids0]
+        elif _is_materialized(store):
+            # the caller's checkpoint is the base piece as it is: a persist
+            # would re-materialize it (3 jobs) into a second copy.  Its
+            # blocks stay the caller's — untracked, so release() keeps them
+            pieces, piece_idsets = [store], [set()]
         else:
             base, base_ids, _ = tracker.persist(store, StorageLevel.MEMORY_AND_DISK_DESER)
             pieces, piece_idsets = [base], [base_ids]
@@ -383,7 +410,10 @@ def fixpoint(
     # it must be released via base.unpersist() (drops the CacheManager
     # entry too) — release-by-RDD-id alone leaves a storage-level-NONE
     # InMemoryRelation that later scans matching the plan recompute through
-    terms = _ckpt(terms)
+    # only the facet join and the minted-term anti-join read the terms
+    # in a round: a system with neither leaves them as the caller's plan
+    if any(r.mints_terms() or _reads_facets(r) for r in rules):
+        terms = _ckpt(terms)
     if delta is not None:
         delta = _ckpt(delta)
 
@@ -414,8 +444,10 @@ def fixpoint(
         # rule joins broadcast their store-side scans too (the hint passes
         # through each scan's filter/projection); left to AQE they run as
         # sort-merge joins until re-planned at run time
-        rule_store = scan_store if large else F.broadcast(scan_store)
-        c = _deduce_round(spark, rule_store, terms, active, const_ids, delta, rnd, functions)
+        c = _deduce_round(
+            spark, scan_store, terms, active, const_ids, delta, rnd, functions,
+            broadcast_store=not large,
+        )
 
         deduced = c.triples if insert_negatives else c.triples.filter(F.col("sign"))
         # dedup BEFORE the anti-join: the groupBy runs a map-side partial

@@ -42,6 +42,28 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
     return spark.createDataFrame(table, st)
 
 
+# Generated-code cache size.  Spark's default of 100 entries is smaller
+# than one pipeline run's plan vocabulary, so the LRU evicted each
+# generated class before the next run could reuse it: every warm
+# ``webkg_batch`` op recompiled 245-254 classes (Janino's compile
+# counter, ``codegen_compiles``) and paid the compile, class loading and
+# JIT warm-up again.  At 1024 entries a warm op compiles 0 (26 at most
+# in the runs measured).  1024 is about 4x the ~250 classes of a cold
+# op and above the ~380 that ``graph_query``'s stream set-up compiles at
+# this size (524-539 at 100, where it recompiles evicted classes).
+# Metaspace after 6 ops was ~164 MB at both sizes.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = "1024"
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (driver and, in local
+    mode, executors): a generated class served from the codegen cache
+    does not count, so the delta over an operation is its compile cost."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def _default_driver_memory() -> str:
     """40 % of physical memory, capped at 24g: the local-mode driver JVM
     is the whole engine, but must leave room for its Python workers."""
@@ -95,6 +117,8 @@ def get_spark(
         # A/B in BENCH_LAYOUT.md) — at cluster scale scan bytes are
         # network+disk bandwidth, the binding resource at 100 TB
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # static: takes effect only here, before the session starts
+        .config(CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

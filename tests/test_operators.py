@@ -701,8 +701,9 @@ def _tc_rule():
 
 
 def test_fixpoint_round_action_budget(spark, monkeypatch):
-    """Driver-overhead contract: after setup (input-store persist count +
-    terms checkpoint), a no-minting small-regime round costs exactly ONE
+    """Driver-overhead contract: after setup (the input-store persist
+    count; the terms stay unmaterialized because no rule reads facets or
+    mints terms), a no-minting small-regime round costs exactly ONE
     driver action — the delta materialization (eager localCheckpoint),
     which carries n_new, the strict-error probe and the next round's
     dispatch predicate set as an Observation.  Earlier rounds paid a
@@ -751,8 +752,73 @@ def test_fixpoint_round_action_budget(spark, monkeypatch):
     n_actions = len(actions)
     monkeypatch.undo()
     assert res.store.count() == 17  # 15 anc closure + other + other2
-    # setup = persist-count + terms checkpoint; then 1 action per round
-    assert n_actions == 2 + res.rounds, actions
+    # setup = persist-count; then 1 action per round
+    assert n_actions == 1 + res.rounds, actions
+
+
+def test_fixpoint_materialized_input_is_base_piece(spark, monkeypatch):
+    """Small regime with ``store_rows`` known: an input store that is
+    already a checkpoint becomes the base piece as it is, with no persist
+    and count (3 jobs) and no second in-memory copy of it; ``release()``
+    frees only the fixpoint's own blocks, never the caller's."""
+    import pyspark.sql.classic.dataframe as dfmod
+
+    from inferdf_rs_spark.caches import persistent_rdd_ids
+    from inferdf_rs_spark.engine import Dataset
+
+    chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
+    ds = build_dataset(spark, chain)
+    before = persistent_rdd_ids(spark)
+    store = ds.triples.localCheckpoint(eager=True)
+    caller_ids = persistent_rdd_ids(spark) - before
+    assert caller_ids
+    sysm = System(spark, [_tc_rule()])
+    sysm.const_ids()
+
+    persists: list[int] = []
+    orig_persist = dfmod.DataFrame.persist
+    monkeypatch.setattr(
+        dfmod.DataFrame,
+        "persist",
+        lambda self, *a, **k: (persists.append(1), orig_persist(self, *a, **k))[1],
+    )
+    res = sysm.fixpoint(Dataset(store, ds.terms, n_triples=5))
+    monkeypatch.undo()
+    assert persists == []
+    assert res.store.count() == 15
+    res.release()
+    assert caller_ids <= persistent_rdd_ids(spark)
+    assert store.count() == 5
+
+
+def test_fixpoint_terms_work_only_for_rules_that_read_terms(spark, monkeypatch):
+    """A round reads the terms only through the facet join and the
+    minted-term anti-join.  A system whose rules do neither keeps the
+    caller's terms frame as it is (no checkpoint job) and never builds
+    the facet view; a rule that compares a variable still builds it."""
+    from inferdf_rs_spark.operators import fixpoint as fp
+
+    calls: list[int] = []
+    orig = fp.resource_facets
+    monkeypatch.setattr(fp, "resource_facets", lambda t: (calls.append(1), orig(t))[1])
+
+    chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
+    ds = build_dataset(spark, chain)
+    res = System(spark, [_tc_rule()]).fixpoint(ds)
+    assert res.store.count() == 15
+    assert calls == [] and res.terms is ds.terms
+    res.release()
+
+    ds = build_dataset(spark, [(blank("0"), iri(EX + "p"), Term.literal("abc"))])
+    cmp_rule = rule(
+        variables=2,
+        hypothesis=[pat("+", v(0), iri(EX + "p"), v(1))],
+        statements=[stmt_true("+", call("lt", v(1), dec(5)))],
+    )
+    res = System(spark, [cmp_rule]).fixpoint(ds)
+    assert calls and res.terms is not ds.terms
+    assert res.trues.count() == 1
+    res.release()
 
 
 def test_fixpoint_store_rows_metadata_skips_count(spark, monkeypatch):

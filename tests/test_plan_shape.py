@@ -135,3 +135,56 @@ def test_contamination_probe_shuffles_hits_only(spark):
     # exactly the aggregate's exchange pair-at-most (AQE may show 1)
     assert _shuffles(plan) <= 2, plan
     assert "BroadcastHashJoin" in plan
+
+
+def _dangling_hints(plan, under_join: bool = False) -> int:
+    """ResolvedHint nodes of an analyzed plan that no join will take:
+    the planner moves a hint up through single-child nodes into the
+    nearest join and drops (and logs) any other."""
+    name = plan.getClass().getSimpleName()
+    n = int(name == "ResolvedHint" and not under_join)
+    kids = plan.children()
+    for i in range(kids.size()):
+        n += _dangling_hints(kids.apply(i), name == "Join" or (under_join and kids.size() == 1))
+    return n
+
+
+def test_fixpoint_round_hints_only_joined_store_scans(spark):
+    """A small-regime round hints the store side of its rule joins as a
+    broadcast, but not the store scan of a single-pattern rule, which
+    joins nothing (the planner would drop that hint with a warning).
+    The optimized plan is the one a hint on every scan gave."""
+    import re
+
+    from inferdf_rs_spark import System, blank, build_dataset, iri, pat, rule, stmt_triple, v
+    from inferdf_rs_spark.operators.fixpoint import _deduce_round
+
+    ex = "https://example.org/#"
+    ds = build_dataset(spark, [(blank(str(i)), iri(ex + "anc"), blank(str(i + 1))) for i in range(5)])
+    single = rule(
+        variables=2,
+        hypothesis=[pat("+", v(0), iri(ex + "anc"), v(1))],
+        statements=[stmt_triple("+", v(1), iri(ex + "desc"), v(0))],
+    )
+    chained = rule(
+        variables=3,
+        hypothesis=[pat("+", v(0), iri(ex + "anc"), v(1)), pat("+", v(1), iri(ex + "anc"), v(2))],
+        statements=[stmt_triple("+", v(0), iri(ex + "anc"), v(2))],
+    )
+    sysm = System(spark, [single, chained])
+    rules = list(enumerate(sysm.rules))
+
+    def round_plan(store, **kw):
+        c = _deduce_round(spark, store, ds.terms, rules, sysm.const_ids(), None, 1, None, **kw)
+        return c.triples._jdf.queryExecution()
+
+    every = round_plan(F.broadcast(ds.triples))
+    joined = round_plan(ds.triples, broadcast_store=True)
+    assert _dangling_hints(every.analyzed()) == 1
+    assert _dangling_hints(joined.analyzed()) == 0
+
+    def norm(qe) -> str:
+        return re.sub(r"#\d+L?", "#", qe.optimizedPlan().toString())
+
+    assert "strategy=broadcast" in norm(joined)
+    assert norm(joined) == norm(every)

@@ -346,11 +346,14 @@ def test_pipeline_derived_counts_match_store(spark, tmp_path):
 
 
 def test_small_store_fixpoint_job_count_pinned(spark, count_jobs):
-    """The small-regime fixpoint on the golden fixture submits exactly 28
+    """The small-regime fixpoint on the golden fixture submits exactly 19
     Spark jobs over its 3 rounds, on every run: each round's stats ride
     on its checkpoint (one action) and every rule join broadcasts its
     store-side scan, so no join waits on AQE to re-plan a sort-merge
-    join.  A change that cuts jobs lowers this pin."""
+    join.  The checkpointed input is the base piece as it is (no persist
+    and count), and the terms are not checkpointed again, since no web
+    rule reads facets or mints terms.  A change that cuts jobs lowers
+    this pin."""
     from inferdf_rs_spark.engine import Dataset
     from inferdf_rs_spark.schemas import CAUSE_STATED
 
@@ -360,9 +363,22 @@ def test_small_store_fixpoint_job_count_pinned(spark, count_jobs):
     for _ in range(2):
         with count_jobs() as jobs:
             res = webkg.web_system(spark).fixpoint(Dataset(stated, terms, n_triples=pr.n_stated))
-        assert (res.rounds, jobs.n) == (3, 28)
+        assert (res.rounds, jobs.n) == (3, 19)
         assert res.store.count() == pr.n_total
         res.release()
+
+
+def test_pipeline_job_count_pinned(spark, count_jobs, tmp_path):
+    """``run_pipeline`` on the golden fixture, written out, submits
+    exactly 37 Spark jobs on every run, the first in the session
+    included: the fixpoint's 19 (pinned above), and extraction, encode
+    and ``write_graph`` around it.  A change that cuts jobs lowers this
+    pin."""
+    pages = synth.synth_pages(spark, N_PAGES)
+    for i in range(2):
+        with count_jobs() as jobs:
+            pr = webkg.run_pipeline(spark, pages, out_dir=str(tmp_path / f"g{i}"))
+        assert (pr.n_total, jobs.n) == (389, 37)
 
 
 def test_pipeline_dedup_pages_drops_mirrors(spark):
