@@ -9,10 +9,15 @@ unpersisted.  At test scale that is invisible; at web scale a 25-round
 closure pins ~25 copies of the label table.
 
 Release works by RDD id: snapshot the persistent-RDD id set around the
-checkpoint call and remember exactly the ids it created.  Driver-side,
-single-threaded use only — a concurrent persist from another thread
-would land in the wrong tracked set (documented limitation; every
-driver loop in this engine is single-threaded).
+checkpoint call and remember exactly the ids it created.  The tracker
+makes checkpoints only, never Dataset-level persists: a persist also
+registers its plan in the session's CacheManager, and releasing its
+blocks by RDD id leaves that entry behind (a later scan of the same
+plan reads through an empty cache).  An input store the fixpoint must
+materialize is checkpointed through the tracker like every other table.
+Driver-side, single-threaded use only — a concurrent persist from
+another thread would land in the wrong tracked set (documented
+limitation; every driver loop in this engine is single-threaded).
 
 NB: unpersisting a localCheckpoint'ed RDD discards data that can NOT be
 recomputed (lineage was truncated) — only release generations that are
@@ -40,8 +45,8 @@ def unpersist_rdd_ids(spark: SparkSession, ids, blocking: bool = False) -> None:
 
 
 class CheckpointTracker:
-    """Routes persist/localCheckpoint calls so the RDD ids they create
-    are remembered and can be released once superseded."""
+    """Routes localCheckpoint calls so the RDD ids they create are
+    remembered and can be released once superseded."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -61,23 +66,6 @@ class CheckpointTracker:
         if storage_level is not None:
             return self._run(lambda: df.localCheckpoint(eager=eager, storageLevel=storage_level))
         return self._run(lambda: df.localCheckpoint(eager=eager))
-
-    def persist(self, df: DataFrame, storage_level) -> tuple[DataFrame, set[int], int]:
-        """persist + materialize (count) so the cached RDD registers
-        inside the tracked window — Dataset.persist alone is lazy and its
-        RDD id only appears at first materialization.  Returns
-        (persisted df, created ids, row count): the materializing count
-        is surfaced so callers never pay a second count job for it."""
-        n = 0
-
-        def go():
-            nonlocal n
-            out = df.persist(storage_level)
-            n = out.count()
-            return out
-
-        out, created = self._run(go)
-        return out, created, n
 
     def release(self, ids=None, blocking: bool = False) -> None:
         """Unpersist the given ids (default: everything tracked)."""

@@ -79,12 +79,9 @@ class FixpointResult:
     # persistent-RDD ids backing store/terms/eqs/trues — release() frees
     # them once the caller has copied (or finished with) the result
     cache_ids: set = field(default_factory=set)
-    # Dataset-level persists (the base store cache): released via
-    # df.unpersist() so the CacheManager entry goes too, not just blocks
-    persisted_dfs: list = field(default_factory=list)
 
     def release(self, blocking: bool = False) -> None:
-        """Unpersist every cache/checkpoint this fixpoint run created.
+        """Unpersist every checkpoint this fixpoint run created.
 
         The result DataFrames become unusable afterwards (localCheckpoint
         lineage is truncated) — call only after materializing your own
@@ -92,9 +89,6 @@ class FixpointResult:
         Long-running callers (streaming: one fixpoint per micro-batch)
         MUST do this or the storage pool grows by one store copy per
         batch."""
-        for df in self.persisted_dfs:
-            df.unpersist(blocking)
-        self.persisted_dfs = []
         unpersist_rdd_ids(self.store.sparkSession, self.cache_ids, blocking)
         self.cache_ids = set()
 
@@ -260,11 +254,17 @@ def fixpoint(
     incomplete closure, i.e. a wrong result); pass True to accept the
     partial store.
     ``store_rows``: the input store's row count when the caller already
-    knows it (catalog / ``graph_meta.json`` sidecar metadata) — skips
-    the initial driver-side ``count()``; in the large regime the input
-    is then partitioned directly (no transient Dataset-level persist),
-    so a 100 TB store is never counted or double-buffered just to pick
-    the join regime.
+    knows it (catalog / ``graph_meta.json`` sidecar metadata, or an
+    Observation on the caller's own checkpoint).  The input store enters
+    the loop by one rule:
+    - count known and above ``store_broadcast_rows``: the input plan is
+      partitioned straight into the first piece (a 100 TB store is never
+      counted or copied just to pick the join regime);
+    - count known and the input already a checkpoint: it is the base
+      piece as it is (its blocks stay the caller's);
+    - otherwise: one ``localCheckpoint`` whose job also observes the row
+      count; if that count is large, the checkpoint is partitioned into
+      the first piece and released.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -367,49 +367,27 @@ def fixpoint(
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
-    # materialize the caller's store plan under AQE; in the large regime
-    # the persisted copy is transient (unpersisted once the partitioned
-    # piece exists) so the storage pool holds ONE copy of the store, not
-    # two — double-buffering 38M+ rows was measured to push the pool into
-    # eviction thrash and slow every later scan.  When the caller passed
-    # ``store_rows`` catalog metadata AND the store is large, skip both
-    # the count and the transient persist: the partitioning shuffle
-    # materializes the input exactly once (the input plan is typically a
-    # bare scan there — a materialized graph read back from parquet).
-    base = None
-    base_live = False
-    if store_rows is not None:
-        n_store = store_rows
-        large = n_store > store_broadcast_rows
-        if large:
-            pc0, ids0 = _piece(store, big=True)
-            pieces, piece_idsets = [pc0], [ids0]
-        elif _is_materialized(store):
-            # the caller's checkpoint is the base piece as it is: a persist
-            # would re-materialize it (3 jobs) into a second copy.  Its
-            # blocks stay the caller's — untracked, so release() keeps them
-            pieces, piece_idsets = [store], [set()]
-        else:
-            base, base_ids, _ = tracker.persist(store, StorageLevel.MEMORY_AND_DISK_DESER)
-            pieces, piece_idsets = [base], [base_ids]
-            base_live = True
+    # the input store enters by the rule in the docstring (``store_rows``)
+    if store_rows is not None and store_rows > store_broadcast_rows:
+        n_store, large = store_rows, True
+        pc0, ids0 = _piece(store, big=True)
+        pieces, piece_idsets = [pc0], [ids0]
+    elif store_rows is not None and _is_materialized(store):
+        # the caller's checkpoint is the base piece as it is: untracked,
+        # so release() keeps its blocks
+        n_store, large = store_rows, False
+        pieces, piece_idsets = [store], [set()]
     else:
-        # n_store comes from the persist's own materializing count — one job
-        base, base_ids, n_store = tracker.persist(store, StorageLevel.MEMORY_AND_DISK_DESER)
+        seen = Observation()
+        base, base_ids = tracker.checkpoint(store.observe(seen, F.count(F.lit(1)).alias("n")))
+        n_store = seen.get["n"]
         large = n_store > store_broadcast_rows
         if large:
-            # _piece (AQE off for partitioning capture) reshuffles cached blocks
             pc0, ids0 = _piece(base, big=True)
             pieces, piece_idsets = [pc0], [ids0]
-            base.unpersist()
-            tracker.ids -= base_ids
+            tracker.release(base_ids)
         else:
             pieces, piece_idsets = [base], [base_ids]
-            base_live = True
-    # base_live: the Dataset-level persist of the input store is live —
-    # it must be released via base.unpersist() (drops the CacheManager
-    # entry too) — release-by-RDD-id alone leaves a storage-level-NONE
-    # InMemoryRelation that later scans matching the plan recompute through
     # only the facet join and the minted-term anti-join read the terms
     # in a round: a system with neither leaves them as the caller's plan
     if any(r.mints_terms() or _reads_facets(r) for r in rules):
@@ -534,8 +512,6 @@ def fixpoint(
             if large:
                 staged.unpersist()
             tracker.release()
-            if base_live:
-                base.unpersist()
             raise ExpressionError(
                 f"expression error in round {rnd}: err={bad.err} "
                 f"rule_id={bad.rule_id} subst_hash={bad.subst_hash}"
@@ -629,12 +605,6 @@ def fixpoint(
             merged, merged_ids = _piece(store_union(), big=True)
             for ids in piece_idsets[:-1]:
                 tracker.release(ids - new_ids)
-            if base_live:
-                # small→large transition: mirror the large-at-start path —
-                # the Dataset-level persist needs df.unpersist() so the
-                # CacheManager entry for the input-store plan goes too
-                base.unpersist()
-                base_live = False
             carry_release = set(new_ids)  # delta reads these one more round
             pieces, piece_idsets = [merged], [merged_ids]
         if any_mints:
@@ -645,16 +615,12 @@ def fixpoint(
 
     if not done and not allow_partial:
         tracker.release()  # same no-leak discipline as the error path
-        if base_live:
-            base.unpersist()
         raise RuntimeError(
             f"fixpoint did not converge within max_rounds={max_rounds} "
             f"(last delta={last_new} facts) — the closure is incomplete; "
             "raise max_rounds or pass allow_partial=True"
         )
-    return FixpointResult(
-        store_union(), terms, eqs, trues, rnd, metrics, tracker.ids, [base] if base_live else []
-    )
+    return FixpointResult(store_union(), terms, eqs, trues, rnd, metrics, tracker.ids)
 
 
 def load_checkpoint(spark: SparkSession, checkpoint_dir: str):

@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..encode import dedup_triples, encode_edges
-from ..engine import Dataset, System
+from ..engine import System
 from ..schemas import PAGES_SCHEMA, TRIPLE_KEY
 from ..terms import merge_terms
 
@@ -69,44 +69,37 @@ class StreamingGraph:
         from ..operators.fixpoint import fixpoint
 
         ds = encode_edges(self.spark, edges, src_partition=f"stream:{epoch_id}")
-        new_triples, ids_in1 = self._tracker.checkpoint(dedup_triples(ds.triples))
+        stated = Observation()
+        new_triples, ids_in1 = self._tracker.checkpoint(
+            dedup_triples(ds.triples).observe(stated, F.count(F.lit(1)).alias("n"))
+        )
         new_terms, ids_in2 = self._tracker.checkpoint(ds.terms)
 
         if self.store is None:
-            base_terms = merge_terms(new_terms, self.system.rule_constants_terms())
-            res = self.system.fixpoint(Dataset(new_triples, base_terms))
+            # first batch: a full deduce over the batch's own checkpoint,
+            # whose observed count lets the fixpoint take it as its base
+            store, delta, store_rows = new_triples, None, stated.get["n"]
+            terms = merge_terms(new_terms, self.system.rule_constants_terms())
         else:
             # delta = genuinely-new stated facts; store already closed
             delta = new_triples.join(self.store.select(*TRIPLE_KEY), TRIPLE_KEY, "left_anti")
-            store = self.store.unionByName(delta)
+            store, store_rows = self.store.unionByName(delta), None
             terms = merge_terms(self.terms, new_terms)
-            res = fixpoint(
-                self.spark,
-                store,
-                terms,
-                self.system.rules,
-                self.system.const_ids(),
-                self.system.functions,
-                initial_delta=delta,
-            )
-        # copy the result out of the fixpoint's internal caches, then
-        # release them AND the previous batch's generation: without this
-        # every micro-batch would leave one cached copy of the (growing)
-        # store in the pool — unbounded memory/disk growth in a
-        # long-running stream.  The pool holds exactly one generation of
-        # (store, terms, eqs, trues) between batches.
-        old_gen = self._gen_ids
-        self.store, ids_s = self._tracker.checkpoint(res.store)
-        self.terms, ids_t = self._tracker.checkpoint(res.terms)
+        res = fixpoint(
+            self.spark,
+            store,
+            terms,
+            self.system.rules,
+            self.system.const_ids(),
+            self.system.functions,
+            initial_delta=delta,
+            store_rows=store_rows,
+        )
         eqs = res.eqs if self.eqs is None else self.eqs.unionByName(res.eqs).dropDuplicates()
         trues = (
             res.trues if self.trues is None else self.trues.unionByName(res.trues).dropDuplicates()
         )
-        self.eqs, ids_e = self._tracker.checkpoint(eqs)
-        self.trues, ids_r = self._tracker.checkpoint(trues)
-        self._gen_ids = ids_s | ids_t | ids_e | ids_r
-        res.release()
-        self._tracker.release(old_gen | ids_in1 | ids_in2)
+        self._swap_generation(res, eqs, trues, ids_in1 | ids_in2)
         self.batches += 1
         if self.commit_every and self.batches % self.commit_every == 0:
             self.publish()
@@ -132,14 +125,26 @@ class StreamingGraph:
             self.system.const_ids(),
             retracted,
         )
+        self._swap_generation(res, self.eqs, self.trues)
+
+    def _swap_generation(
+        self, res, eqs: DataFrame, trues: DataFrame, inputs: set = frozenset()
+    ) -> None:
+        """Copy the result out of the fixpoint's internal caches, then
+        release them, the previous generation and the batch's ``inputs``
+        checkpoints: without this every micro-batch would leave one
+        cached copy of the (growing) store in the pool — unbounded
+        memory/disk growth in a long-running stream.  The pool holds
+        exactly one generation of (store, terms, eqs, trues) between
+        batches."""
         old_gen = self._gen_ids
         self.store, ids_s = self._tracker.checkpoint(res.store)
         self.terms, ids_t = self._tracker.checkpoint(res.terms)
-        self.eqs, ids_e = self._tracker.checkpoint(self.eqs)
-        self.trues, ids_r = self._tracker.checkpoint(self.trues)
+        self.eqs, ids_e = self._tracker.checkpoint(eqs)
+        self.trues, ids_r = self._tracker.checkpoint(trues)
         self._gen_ids = ids_s | ids_t | ids_e | ids_r
         res.release()
-        self._tracker.release(old_gen)
+        self._tracker.release(old_gen | inputs)
 
     def publish(self) -> int:
         """Commit the accumulated graph as a new snapshot version under

@@ -80,6 +80,30 @@ def test_fixpoint_release_restores_pool(spark):
     assert persistent_rdd_ids(spark) - baseline == set(), "release() left cached state behind"
 
 
+def test_fixpoint_input_leaves_no_cache_entry(spark):
+    # an input the loop must materialize (no known count, not a
+    # checkpoint) enters as a tracked checkpoint, never a Dataset-level
+    # persist: while the result is live the session's CacheManager holds
+    # no entry for the input plan, and release() frees every block
+    from pyspark import StorageLevel
+
+    ds = _chain_dataset(spark, n=6)
+    tc = rule(
+        variables=3,
+        hypothesis=[
+            pat("+", v(0), iri(EX + "next"), v(1)),
+            pat("+", v(1), iri(EX + "next"), v(2)),
+        ],
+        statements=[stmt_triple("+", v(0), iri(EX + "next"), v(2))],
+    )
+    baseline = persistent_rdd_ids(spark)
+    res = System(spark, [tc]).fixpoint(ds)
+    assert res.store.count() == 6 * 7 // 2
+    assert ds.triples.storageLevel == StorageLevel.NONE, "input plan is in the CacheManager"
+    res.release()
+    assert persistent_rdd_ids(spark) - baseline == set(), "release() left cached state behind"
+
+
 def test_fixpoint_expression_error_releases_pool(spark):
     # the ExpressionError raise path must release every cache the run
     # created: a long-running driver catching it per batch (streaming)

@@ -701,9 +701,10 @@ def _tc_rule():
 
 
 def test_fixpoint_round_action_budget(spark, monkeypatch):
-    """Driver-overhead contract: after setup (the input-store persist
-    count; the terms stay unmaterialized because no rule reads facets or
-    mints terms), a no-minting small-regime round costs exactly ONE
+    """Driver-overhead contract: after setup (the input-store checkpoint,
+    which observes its row count on the same job; the terms stay
+    unmaterialized because no rule reads facets or mints terms), a
+    no-minting small-regime round costs exactly ONE
     driver action — the delta materialization (eager localCheckpoint),
     which carries n_new, the strict-error probe and the next round's
     dispatch predicate set as an Observation.  Earlier rounds paid a
@@ -752,15 +753,16 @@ def test_fixpoint_round_action_budget(spark, monkeypatch):
     n_actions = len(actions)
     monkeypatch.undo()
     assert res.store.count() == 17  # 15 anc closure + other + other2
-    # setup = persist-count; then 1 action per round
+    # setup = the input checkpoint; then 1 action per round
     assert n_actions == 1 + res.rounds, actions
 
 
 def test_fixpoint_materialized_input_is_base_piece(spark, monkeypatch):
     """Small regime with ``store_rows`` known: an input store that is
-    already a checkpoint becomes the base piece as it is, with no persist
-    and count (3 jobs) and no second in-memory copy of it; ``release()``
-    frees only the fixpoint's own blocks, never the caller's."""
+    already a checkpoint becomes the base piece as it is, with no second
+    checkpoint of it (and no persist: the loop never persists its input);
+    ``release()`` frees only the fixpoint's own blocks, never the
+    caller's."""
     import pyspark.sql.classic.dataframe as dfmod
 
     from inferdf_rs_spark.caches import persistent_rdd_ids

@@ -381,6 +381,36 @@ def test_pipeline_job_count_pinned(spark, count_jobs, tmp_path):
         assert (pr.n_total, jobs.n) == (389, 37)
 
 
+def test_stream_micro_batch_job_count_pinned(spark, count_jobs):
+    """One base and one delta ``StreamingGraph.process_batch`` over the
+    golden fixture's pages (pages 0-39, then 40-59) submit exactly 26
+    and 29 Spark jobs, on every run: each batch makes one fixpoint
+    call, and the base batch's stated triples, checkpointed with their
+    count observed on the same job, are that fixpoint's base piece as
+    they are.  A change that cuts jobs lowers these pins."""
+    from inferdf_rs_spark import System
+    from inferdf_rs_spark.streaming.ingest import StreamingGraph
+
+    pages = synth.synth_pages(spark, N_PAGES)
+    page_no = F.element_at(F.split("url", "/"), -1).cast("int")
+    dicts = [synth.alias_dict(spark), synth.entity_types(spark), synth.sameas_seed(spark)]
+    batches = [
+        webkg.stated_edges(spark, extract_text(pages.filter(cond)), *dicts).localCheckpoint()
+        for cond in (page_no < 40, page_no >= 40)
+    ]
+    pr = webkg.run_pipeline(spark, pages)
+    counts = []
+    for _ in range(2):
+        sg = StreamingGraph(spark, System(spark, webkg.web_rules()), out_dir="/unused")
+        for epoch, edges in enumerate(batches):
+            with count_jobs() as jobs:
+                sg.process_batch(edges, epoch)
+            counts.append(jobs.n)
+        assert sg.counts() == (pr.n_total, 2)
+        sg._tracker.release()
+    assert counts == [26, 29] * 2, counts
+
+
 def test_pipeline_dedup_pages_drops_mirrors(spark):
     """dedup_pages=True: mirror urls serving byte-identical html are
     dropped before extraction (keeper = lexicographically smallest url),
