@@ -19,16 +19,19 @@ Scale design:
   pieces, so the store side of every anti-join is exchange-free — only
   the (small) conclusions stream shuffles each round.  Pieces compact
   into one when the list grows past a threshold;
-- **one deduction per round**: the strict expression-error indicator is
-  folded into the same materialization as the new-facts delta (error
-  rows ride along with a negative ``cause_kind`` marker), instead of a
-  second full deduction job;
+- **one way to materialize a delta**: the seed (``initial_delta``) and
+  every round's new facts take the same anti-join against the store and
+  one checkpoint, planned under AQE, whose own job observes the delta's
+  row count, its {(p, sign)} set and the round's first expression error
+  (error rows ride along and are filtered out below the checkpoint):
+  one driver action per round, two in the large regime, where a
+  co-partitioned piece re-reads those blocks and supersedes them;
 - **per-delta rule dispatch** (reference ``BipolarMap`` pattern index,
   src/pattern/map.rs:13-25, src/system/mod.rs:144-148): a rule runs in
   a delta round only if at least one hypothesis slot can match a delta
-  triple — checked driver-side on the delta's distinct (sign, p) set
+  triple — checked driver-side on the delta's observed (sign, p) set
   against the slot's sign and constant predicate;
-- large deltas spill: past ``delta_disk_threshold`` rows the piece
+- large deltas spill: past ``DELTA_DISK_ROWS`` rows the piece
   checkpoints use MEMORY_AND_DISK_DESER blocks that evict under memory
   pressure (kills the all-deltas-in-RAM cliff);
 - every round's new facts and new terms are (optionally) appended as a
@@ -62,6 +65,9 @@ from .match import find_substitutions
 # repartition exchanges — 4 fewer UnsafeRow slots (incl. the one string)
 # per shuffled row.
 NARROW_COLS = ["s", "p", "o", "sign", "rule_id", "subst_hash"]
+
+# a round after a delta of more rows checkpoints to disk-evictable blocks
+DELTA_DISK_ROWS = 2_000_000
 
 
 class ExpressionError(RuntimeError):
@@ -130,6 +136,21 @@ def _reads_facets(rule: Rule) -> bool:
     return bool(statement_facet_vars(rule.conclusion.statements))
 
 
+def _delta_stats(is_fact=None) -> list:
+    """What a delta's checkpoint observes: its fact count and its
+    {(p, sign)} set (the next dispatch); ``is_fact`` skips marker rows."""
+    fact = F.lit(True) if is_fact is None else is_fact
+    return [
+        F.count(F.when(fact, 1)).alias("n_new"),
+        F.collect_set(F.when(fact, F.struct("p", "sign"))).alias("dps"),
+    ]
+
+
+def _observed(obs: Observation) -> tuple[int, set]:
+    got = obs.get
+    return int(got["n_new"]), {(r.p, r.sign) for r in got["dps"]}
+
+
 def _is_materialized(df: DataFrame) -> bool:
     """Is ``df`` a bare checkpoint (its analyzed plan a ``LogicalRDD``)?
     Scanning one reads stored blocks; it needs no further persist."""
@@ -142,7 +163,7 @@ def _slot_can_feed(sp, const_ids: dict, pos_ps: set, neg_ps: set) -> bool:
     (src/pattern/map.rs:13-25): the slot's sign must have delta rows and
     its predicate, when constant, must be among the delta's predicates.
     (Constant s/o positions could prune further; predicate+sign is the
-    dominant case and keeps the delta probe to one tiny distinct.)"""
+    dominant case and keeps the observed set small.)"""
     from ..rules import Var
 
     ps = pos_ps if sp.sign else neg_ps
@@ -155,24 +176,16 @@ def _slot_can_feed(sp, const_ids: dict, pos_ps: set, neg_ps: set) -> bool:
 
 
 def _dispatch_rules(
-    rules: list[Rule],
-    const_ids: dict,
-    delta: DataFrame | None,
-    delta_ps: set | None = None,
+    rules: list[Rule], const_ids: dict, delta_ps: set | None
 ) -> list[tuple[int, Rule]]:
-    """J3: prune rules no delta triple can feed (full-store rounds run all).
+    """J3: prune rules no delta triple can feed.
 
-    ``delta_ps``: the delta's distinct {(p, sign)} set when the caller
-    already knows it — the fixpoint loop folds it into the per-round
-    stats aggregate, so steady-state rounds dispatch with ZERO extra
-    Spark actions.  ``None`` falls back to a one-off distinct probe
-    (first seeded round / checkpoint resume)."""
+    ``delta_ps``: the delta's {(p, sign)} set, observed on the
+    checkpoint that materialized the delta (so dispatch costs no Spark
+    action); ``None`` means a full round, which runs every rule."""
     indexed = list(enumerate(rules))
-    if delta is None or len(rules) < 2:
+    if delta_ps is None or len(rules) < 2:
         return indexed
-    if delta_ps is None:
-        dps = delta.select("p", "sign").distinct().collect()
-        delta_ps = {(r.p, r.sign) for r in dps}
     pos_ps = {p for p, sg in delta_ps if sg}
     neg_ps = {p for p, sg in delta_ps if not sg}
     return [
@@ -217,8 +230,6 @@ def fixpoint(
     max_rounds: int = 100,
     checkpoint_dir: str | None = None,
     insert_negatives: bool = False,
-    strict_errors: bool = True,
-    delta_disk_threshold: int = 2_000_000,
     compact_pieces: int = 16,
     store_broadcast_rows: int = 2_000_000,
     initial_delta: DataFrame | None = None,
@@ -233,10 +244,8 @@ def fixpoint(
     statements accumulate in side tables for the caller (the reference
     likewise leaves them to the caller — it only checks them in
     validation).  Set ``insert_negatives`` to also store negative facts.
+    An expression error raises ``ExpressionError`` (the reference's Err).
 
-    ``delta_disk_threshold``: rounds whose previous delta exceeded this
-    many rows checkpoint to disk-evictable (MEMORY_AND_DISK_DESER) blocks
-    instead of pinned executor memory.
     ``compact_pieces``: max number of co-partitioned store pieces before
     they are compacted into one (a single store-size exchange, amortized
     over that many rounds).
@@ -245,10 +254,11 @@ def fixpoint(
     (map-side, zero exchange — fastest at small scale); past it the loop
     switches to the co-partitioned piece chain (zero *store-side*
     exchange — the only plan that survives a store too big to broadcast).
-    ``initial_delta``: start delta-seeded instead of with a full deduce —
-    the streaming incremental-maintenance path (the store is already
-    closed; only delta-touching derivations can be new).  Ignored when
-    resuming from a checkpoint.
+    ``initial_delta``: candidate facts (distinct on the triple key) apart
+    from a closed ``store`` — the seeded ``deduce_from_triple`` path of
+    streaming ingest and retraction.  The seed enters like every round's
+    delta (anti-join, one observed checkpoint, a store piece) and seeds
+    round 1 in place of a full deduce.  Not with ``checkpoint_dir``.
     ``allow_partial``: by default the loop RAISES if max_rounds is
     exhausted before the delta empties (a silent non-fixpoint is an
     incomplete closure, i.e. a wrong result); pass True to accept the
@@ -265,6 +275,8 @@ def fixpoint(
     - otherwise: one ``localCheckpoint`` whose job also observes the row
       count; if that count is large, the checkpoint is partitioned into
       the first piece and released.
+    On a resume it counts the checkpoint's base, and the last round's
+    delta re-enters as the seed.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -279,8 +291,16 @@ def fixpoint(
     trues = _empty_df(spark, TRUES_SCHEMA)
     metrics: list[dict] = []
 
-    start_round = 0
+    seed = initial_delta
+    # round numbers start above initial_round: the retraction path
+    # (operators/retract.py) re-derives facts into a store whose
+    # retained facts keep their original rounds — new rounds must sit
+    # strictly ABOVE them or the explain walk's strict round-decrease
+    # invariant breaks on rederived lineage
+    start_round = initial_round
     if checkpoint_dir:
+        if seed is not None:
+            raise ValueError("fixpoint(): a checkpointed run cannot take initial_delta")
         meta = read_meta(checkpoint_dir)
         if meta is None:
             os.makedirs(checkpoint_dir, exist_ok=True)
@@ -288,26 +308,13 @@ def fixpoint(
             terms.write.mode("overwrite").parquet(os.path.join(checkpoint_dir, "terms_base"))
             meta = {"round": 0, "done": False, "id_bits": _terms_mod.ID_BITS}
             _write_meta(checkpoint_dir, meta)
-        st, tm, dl, eqs_c, trues_c, metrics_c = load_checkpoint(spark, checkpoint_dir)
-        store, terms, delta = st, tm, dl
-        eqs, trues = eqs_c, trues_c
-        metrics = metrics_c
+        store, terms, seed, eqs, trues, metrics = load_checkpoint(spark, checkpoint_dir)
         start_round = meta["round"]
         if meta.get("done"):
+            # the last round found nothing: its (empty) delta adds no facts
             return FixpointResult(store, terms, eqs, trues, start_round, metrics)
         if store_rows is not None:
-            # caller metadata describes ITS input (= the checkpoint base);
-            # the resumed store also holds every completed round's delta,
-            # whose sizes the meta records — keep the regime pick honest
-            store_rows += sum(m.get("new_facts", 0) for m in metrics)
-    else:
-        delta = initial_delta  # None ⇒ round 1 = full deduce
-        # round numbers start above initial_round: the retraction path
-        # (operators/retract.py) re-derives facts into a store whose
-        # retained facts keep their original rounds — new rounds must sit
-        # strictly ABOVE them or the explain walk's strict round-decrease
-        # invariant breaks on rederived lineage
-        start_round = initial_round
+            store_rows += sum(m.get("new_facts", 0) for m in metrics[:-1])
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     tracker = CheckpointTracker(spark)
@@ -362,8 +369,7 @@ def fixpoint(
         prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            out, ids = tracker.checkpoint(rp, storage_level=lvl)
-            return out, ids
+            return tracker.checkpoint(rp, storage_level=lvl)
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
@@ -392,8 +398,6 @@ def fixpoint(
     # in a round: a system with neither leaves them as the caller's plan
     if any(r.mints_terms() or _reads_facets(r) for r in rules):
         terms = _ckpt(terms)
-    if delta is not None:
-        delta = _ckpt(delta)
 
     def store_union() -> DataFrame:
         out = pieces[0]
@@ -401,29 +405,92 @@ def fixpoint(
             out = out.unionByName(pc)
         return out
 
+    def anti_store(df: DataFrame) -> DataFrame:
+        """``df`` without the store's rows.  Small regime: one broadcast
+        anti-join (map-side, zero exchange).  Large regime: chained
+        anti-joins against the co-partitioned pieces → zero *store-side*
+        exchange — the plan that survives a store too big to broadcast."""
+        if not large:
+            keys = F.broadcast(store_union().select(*TRIPLE_KEY))
+            return df.join(keys, on=TRIPLE_KEY, how="left_anti")
+        for pc in pieces:
+            df = df.join(pc.select(*TRIPLE_KEY), on=TRIPLE_KEY, how="left_anti")
+        return df
+
+    def materialize(staged: DataFrame, errors: bool = False):
+        """The one way a delta enters the loop (module doc).  Returns
+        (delta, its block ids, fact count, (p, sign) set)."""
+        is_fact = (F.col("err") == 0) if errors else None
+        stats = _delta_stats(is_fact)
+        if errors:
+            first_err = F.when(F.col("err") > 0, F.struct("err", "rule_id", "subst_hash"))
+            stats.append(F.min(first_err).alias("bad"))
+        obs = Observation()
+        facts = staged.observe(obs, *stats)
+        if errors:
+            facts = facts.filter(is_fact).drop("err")
+        # the deduction runs under AQE in this checkpoint (runtime
+        # broadcast of a small delta, skew splits); the large regime's
+        # piece (AQE off for partitioning capture) only re-reads its
+        # blocks, which are released once the piece exists
+        lvl = StorageLevel.MEMORY_AND_DISK_DESER if large else None
+        out, ids = tracker.checkpoint(facts, storage_level=lvl)
+        bad = obs.get["bad"] if errors else None
+        if bad is not None:
+            tracker.release()  # a caller catching this must not leak a store copy
+            raise ExpressionError(
+                f"expression error in round {rnd}: err={bad.err} "
+                f"rule_id={bad.rule_id} subst_hash={bad.subst_hash}"
+            )
+        if large:
+            piece, piece_ids = _piece(out, big=last_new > DELTA_DISK_ROWS)
+            tracker.release(ids)
+            out, ids = piece, piece_ids
+        return (out, ids, *_observed(obs))
+
+    def add_piece(piece: DataFrame, ids: set, n: int) -> None:
+        """Append a delta piece.  Crossing the broadcastable horizon (one
+        store-size exchange, then exchange-free rounds) or outgrowing
+        ``compact_pieces`` (the same exchange, amortized) compacts the
+        pieces; superseded ones are released, EXCEPT the new piece's
+        blocks, which the next round's delta reads."""
+        nonlocal n_store, large, pieces, piece_idsets, carry_release
+        n_store += n
+        pieces.append(piece)
+        piece_idsets.append(ids)
+        if (not large and n_store > store_broadcast_rows) or (
+            large and len(pieces) > compact_pieces
+        ):
+            large = True
+            merged, merged_ids = _piece(store_union(), big=True)
+            for old in piece_idsets[:-1]:
+                tracker.release(old - ids)
+            carry_release = set(ids)  # the delta reads these one more round
+            pieces, piece_idsets = [merged], [merged_ids]
+
     rnd = start_round
     last_new = 0
     # blocks kept alive one extra round because the delta still reads
     # them after their piece was compacted away (released next round)
     carry_release: set = set()
-    # the delta's distinct {(p, sign)} set, folded into the previous
-    # round's stats aggregate — None (first seeded round / resume) makes
-    # _dispatch_rules fall back to a one-off distinct probe
-    delta_ps: set | None = None
+    # the delta and its {(p, sign)} set; None makes round 1 a full deduce
+    delta = delta_ps = None
+    if seed is not None:
+        delta, ids, last_new, delta_ps = materialize(anti_store(seed.select(*_schema_cols)))
+        add_piece(delta, ids, last_new)
     # A checkpoint resumed at start_round > 0 with meta done=False is NOT
     # converged — if it already sits at max_rounds the loop never runs and
     # the allow_partial contract below must still fire.
     done = start_round == 0
     while rnd < max_rounds:
         rnd += 1
-        scan_store = store_union()
-        active = _dispatch_rules(rules, const_ids, delta, delta_ps)
+        active = _dispatch_rules(rules, const_ids, delta_ps)
         # small regime: the store is within the broadcast bound, so the
         # rule joins broadcast their store-side scans too (the hint passes
         # through each scan's filter/projection); left to AQE they run as
         # sort-merge joins until re-planned at run time
         c = _deduce_round(
-            spark, scan_store, terms, active, const_ids, delta, rnd, functions,
+            spark, store_union(), terms, active, const_ids, delta, rnd, functions,
             broadcast_store=not large,
         )
 
@@ -436,33 +503,17 @@ def fixpoint(
         # by TWO rules keeps the lexicographically-least (rule_id,
         # subst_hash) — dropDuplicates would retain an arbitrary one,
         # making the stored lineage vary across runs/retries against the
-        # engine's determinism guarantees.  Small regime: one broadcast
-        # anti-join against the whole store (map-side, zero exchange).
-        # Large regime: chained anti-joins against co-partitioned pieces
-        # → zero *store-side* exchange per round (only the conclusions
-        # stream shuffles) — the plan that survives a store too big to
-        # broadcast.
-        new = (
+        # engine's determinism guarantees.
+        new = anti_store(
             deduced.select(*NARROW_COLS)
             .groupBy(*TRIPLE_KEY)
             .agg(F.min(F.struct("rule_id", "subst_hash")).alias("_lin"))
             .select(*TRIPLE_KEY, "_lin.*")
         )
-        if large:
-            for pc in pieces:
-                new = new.join(pc.select(*TRIPLE_KEY), on=TRIPLE_KEY, how="left_anti")
-        else:
-            new = new.join(
-                F.broadcast(scan_store.select(*TRIPLE_KEY)), on=TRIPLE_KEY, how="left_anti"
-            )
 
-        # fold the strict-error indicator into the same materialization as
-        # the delta (error rows ride along with err > 0) — one deduction
-        # computation per round, not two.  The deduction runs under AQE in
-        # this localCheckpoint; the following _piece shuffle (AQE off for
-        # partitioning capture) only re-reads its blocks.
-        check_errors = strict_errors and any(r.has_expressions() for _, r in active)
-        if check_errors:
+        # error rows ride along with err > 0: one deduction per round
+        errors = any(r.has_expressions() for _, r in active)
+        if errors:
             err_rows = c.errors.select(
                 F.lit(None).cast("long").alias("s"),
                 F.lit(None).cast("long").alias("p"),
@@ -472,59 +523,8 @@ def fixpoint(
                 F.col("subst_hash"),
                 F.col("err").cast("int").alias("err"),
             )
-            staged = new.withColumn("err", F.lit(0).cast("int")).unionByName(err_rows)
-        else:
-            staged = new
-        # ONE driver action per round materializes the delta and all round
-        # stats: new-fact count, strict-error probe, and the NEXT round's
-        # dispatch predicate set (collect_set is bounded by the delta's
-        # distinct (predicate, sign) count; web-KG predicate vocabularies
-        # are small).  Small regime: the stats ride on the checkpoint that
-        # IS the store piece, as an Observation.  Large regime: a
-        # TRANSIENT persist that the aggregate materializes — the
-        # partitioned piece supersedes it and the copy is released (a
-        # leaked copy per round was measured to thrash the storage pool).
-        is_fact = (F.col("err") == 0) if check_errors else F.lit(True)
-        agg_cols = [
-            F.count(F.when(is_fact, 1)).alias("n_new"),
-            F.collect_set(F.when(is_fact, F.struct("p", "sign"))).alias("dps"),
-        ]
-        if check_errors:
-            agg_cols.append(
-                F.min(
-                    F.when(F.col("err") > 0, F.struct("err", "rule_id", "subst_hash"))
-                ).alias("bad")
-            )
-        staged_ids: set = set()
-        if large:
-            staged = staged.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-            stats = staged.agg(*agg_cols).collect()[0]
-        else:
-            obs = Observation()
-            staged, staged_ids = tracker.checkpoint(staged.observe(obs, *agg_cols))
-            stats = obs.get
-        if check_errors and stats["bad"] is not None:
-            # error path: release every cache/checkpoint this run
-            # created — a long-running caller that catches
-            # ExpressionError per batch (streaming) must not leak one
-            # store copy per failure
-            bad = stats["bad"]
-            if large:
-                staged.unpersist()
-            tracker.release()
-            raise ExpressionError(
-                f"expression error in round {rnd}: err={bad.err} "
-                f"rule_id={bad.rule_id} subst_hash={bad.subst_hash}"
-            )
-        new_src = staged.filter(F.col("err") == 0).drop("err") if check_errors else staged
-        if large:
-            new, new_ids = _piece(new_src, big=last_new > delta_disk_threshold)
-            staged.unpersist()
-        else:
-            new = new_src  # (a filter over) checkpointed narrow blocks
-            new_ids = staged_ids
-        n_new = int(stats["n_new"])
-        delta_ps = {(r.p, r.sign) for r in stats["dps"]}
+            new = new.withColumn("err", F.lit(0).cast("int")).unionByName(err_rows)
+        new, new_ids, n_new, delta_ps = materialize(new, errors)
         last_new = n_new
         new_full = _attach_lineage(new, rnd)
 
@@ -590,23 +590,7 @@ def fixpoint(
 
         if done:
             break
-        n_store += n_new
-        pieces.append(new_full)
-        piece_idsets.append(new_ids)
-        if (not large and n_store > store_broadcast_rows) or (
-            large and len(pieces) > compact_pieces
-        ):
-            # crossed the broadcastable horizon (one store-size exchange,
-            # then exchange-free rounds) — or compacting the piece chain
-            # (the same exchange, amortized over compact_pieces rounds).
-            # Superseded piece generations are released, EXCEPT the
-            # current round's blocks, which the next round's delta reads.
-            large = True
-            merged, merged_ids = _piece(store_union(), big=True)
-            for ids in piece_idsets[:-1]:
-                tracker.release(ids - new_ids)
-            carry_release = set(new_ids)  # delta reads these one more round
-            pieces, piece_idsets = [merged], [merged_ids]
+        add_piece(new_full, new_ids, n_new)
         if any_mints:
             terms = merge_terms(terms, new_terms)
             if rnd % 8 == 0:
@@ -624,7 +608,9 @@ def fixpoint(
 
 
 def load_checkpoint(spark: SparkSession, checkpoint_dir: str):
-    """Rebuild fixpoint state from a checkpoint dir (resume path).
+    """Rebuild fixpoint state from a checkpoint dir (resume path): the
+    store through the next-to-last completed round and, apart from it,
+    the last round's delta, which the resumed loop takes as its seed.
     Schemas follow the active id width (``terms.set_id_bits``); the meta
     file records the width the checkpoint was WRITTEN with, and resuming
     at any other width raises instead of silently misreading the parquet
@@ -648,8 +634,11 @@ def load_checkpoint(spark: SparkSession, checkpoint_dir: str):
     trues = _empty_df(spark, TRUES_SCHEMA)
     delta = None
     for k in range(1, meta["round"] + 1):
-        d = spark.read.schema(triples_schema()).parquet(os.path.join(checkpoint_dir, f"delta/round={k}"))
-        store = store.unionByName(d)
+        if delta is not None:
+            store = store.unionByName(delta)
+        delta = spark.read.schema(triples_schema()).parquet(
+            os.path.join(checkpoint_dir, f"delta/round={k}")
+        )
         tdir = os.path.join(checkpoint_dir, f"new_terms/round={k}")
         if os.path.isdir(tdir):
             terms = terms.unionByName(spark.read.schema(terms_schema()).parquet(tdir))
@@ -659,5 +648,4 @@ def load_checkpoint(spark: SparkSession, checkpoint_dir: str):
         trdir = os.path.join(checkpoint_dir, f"trues/round={k}")
         if os.path.isdir(trdir):
             trues = trues.unionByName(spark.read.parquet(trdir))
-        delta = d
     return store, terms, delta, eqs.dropDuplicates(), trues.dropDuplicates(), meta.get("metrics", [])

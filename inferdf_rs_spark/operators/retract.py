@@ -17,12 +17,14 @@ Classic DRed (Gupta/Mumick/Subrahmanian, SIGMOD'93), Spark-shaped:
    (the single full-match round is DRed's known cost), keeping exactly
    the conclusions that were overdeleted: those have alternative
    support and come back with fresh lineage.
-3. **Propagate** — the re-inserted facts seed a normal insert fixpoint
-   (the same ``initial_delta`` path streaming ingest uses).  Every
-   conclusion it finds is inside the old closure, so it terminates by
-   re-inserting at most the overdeleted set.  Its rounds start ABOVE
-   the store's max round (``initial_round``) so the provenance walk's
-   strict round-decrease invariant keeps holding.
+3. **Propagate** — the survivors are the store of a normal insert
+   fixpoint and the rederived facts, apart from them, its seed (the
+   same ``initial_delta`` path streaming ingest uses): the fixpoint
+   materializes them once as a store piece.  Every conclusion it finds
+   is inside the old closure, so it terminates by re-inserting at most
+   the overdeleted set.  Its rounds start ABOVE the store's max round
+   (``initial_round``) so the provenance walk's strict round-decrease
+   invariant keeps holding.
 
 Scope: rule systems whose conclusions are pure Triple statements over
 universal variables (no Eq/True side statements, no existential
@@ -32,14 +34,14 @@ incremental path supports; anything else raises.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..caches import CheckpointTracker
 from ..rules import TripleStmt, Var
 from ..terms import Term
 from ..schemas import CAUSE_ENTAILED, TRIPLE_KEY, TRIPLES_SCHEMA
-from .fixpoint import NARROW_COLS, _deduce_round, _dispatch_rules, fixpoint
+from .fixpoint import NARROW_COLS, _deduce_round, _delta_stats, _dispatch_rules, _observed, fixpoint
 
 
 def _check_supported(rules) -> None:
@@ -84,28 +86,30 @@ def retract(
     """Remove ``retracted`` stated facts (frame with the TRIPLE_KEY
     columns ``s p o sign``) from a CLOSED store and restore the fixpoint
     incrementally.  Returns a ``FixpointResult`` whose ``store`` is the
-    exact closure of the surviving stated facts."""
+    exact closure of the surviving stated facts.  Not resumable: a
+    ``checkpoint_dir`` raises, because the propagation seed (the
+    rederived facts) would be missing from the checkpoint's base."""
     _check_supported(rules)
+    if fixpoint_kw.get("checkpoint_dir"):
+        raise ValueError(
+            "retract(): checkpoint_dir is not supported (its base would miss the seed)"
+        )
     schema_cols = [f.name for f in TRIPLES_SCHEMA.fields]
     store = store.select(*[c for c in schema_cols if c in store.columns])
     tracker = CheckpointTracker(spark)
     rules = list(rules)
 
     # ---- 1. overdelete ----------------------------------------------
-    # Round fold (mirrors fixpoint.py's single stats aggregate): each
-    # round runs exactly TWO driver actions — the eager checkpoint of the
-    # newly-deleted keys and one tiny aggregate over its narrow blocks
-    # that yields both the convergence count and the next round's
-    # dispatch predicate set.  The former per-round copies of the whole
-    # accumulated ``deleted`` set and the ``limit(1)`` convergence probe
-    # are gone: deleted keys accumulate as a UNION of the per-round
-    # checkpointed pieces (p and sign are part of the triple key, so the
-    # delta's {(p, sign)} set IS the newly piece's — no extra probe), and
-    # the next delta is a lazy semi-join over checkpointed inputs.
+    # ONE driver action per round: the checkpoint of the newly-deleted
+    # keys observes the convergence count and the next dispatch set (p
+    # and sign are key columns, so the next delta's set IS newly's).
+    # Deleted keys accumulate as a UNION of the checkpointed pieces.
     retr_keys = retracted.select(*TRIPLE_KEY).dropDuplicates()
+    obs = Observation()
     delta, delta_ids = tracker.checkpoint(
-        store.join(retr_keys, on=TRIPLE_KEY, how="left_semi")
+        store.join(retr_keys, on=TRIPLE_KEY, how="left_semi").observe(obs, *_delta_stats())
     )
+    _, delta_ps = _observed(obs)
     deleted_pieces = [delta.select(*TRIPLE_KEY)]
     entailed_keys = store.filter(F.col("cause_kind") == CAUSE_ENTAILED).select(*TRIPLE_KEY)
 
@@ -115,26 +119,23 @@ def retract(
             out = out.unionByName(pc)
         return out
 
-    delta_ps: set | None = None  # round 1 falls back to the distinct probe
     overdelete_ids: set = set(delta_ids)
     rnd = 0
     while rnd < max_rounds:
         rnd += 1
-        active = _dispatch_rules(rules, const_ids, delta, delta_ps)
+        active = _dispatch_rules(rules, const_ids, delta_ps)
         if not active:
             break
         c = _deduce_round(spark, store, terms, active, const_ids, delta, rnd, functions)
         cand = c.triples.select(*TRIPLE_KEY).dropDuplicates()
+        obs = Observation()
         newly, newly_ids = tracker.checkpoint(
-            cand.join(entailed_keys, on=TRIPLE_KEY, how="left_semi").join(
-                deleted_union(), on=TRIPLE_KEY, how="left_anti"
-            )
+            cand.join(entailed_keys, on=TRIPLE_KEY, how="left_semi")
+            .join(deleted_union(), on=TRIPLE_KEY, how="left_anti")
+            .observe(obs, *_delta_stats())
         )
-        stats = newly.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(F.struct("p", "sign")).alias("dps"),
-        ).collect()[0]
-        if stats["n"] == 0:
+        n_newly, delta_ps = _observed(obs)
+        if n_newly == 0:
             tracker.release(newly_ids)
             break
         # semi-naive: next round's delta is the store rows keyed by the
@@ -143,19 +144,23 @@ def retract(
         # the deduction that produced the keys)
         deleted_pieces.append(newly)
         overdelete_ids |= newly_ids
-        delta_ps = {(r.p, r.sign) for r in stats["dps"]}
         delta = store.join(newly, on=TRIPLE_KEY, how="left_semi")
     else:
         raise RuntimeError(f"retract(): overdeletion did not converge in {max_rounds} rounds")
 
     deleted = deleted_union()
-    survivors, _ = tracker.checkpoint(store.join(deleted, on=TRIPLE_KEY, how="left_anti"))
+    obs = Observation()
+    survivors, _ = tracker.checkpoint(
+        store.join(deleted, on=TRIPLE_KEY, how="left_anti").observe(
+            obs, F.count(F.lit(1)).alias("n"), F.max("round").alias("max_round")
+        )
+    )
+    n_survivors, max_round = obs.get["n"], obs.get["max_round"] or 0
 
     # ---- 2. rederive (one full deduction round over the survivors) ---
     c = _deduce_round(
         spark, survivors, terms, list(enumerate(rules)), const_ids, None, 0, functions
     )
-    max_round = survivors.agg(F.coalesce(F.max("round"), F.lit(0))).first()[0]
     # mirror the insert fixpoint's sign discipline: negative conclusions
     # are rederived only when the propagation step will also insert them
     deduced = (
@@ -179,28 +184,19 @@ def retract(
             F.lit(None).cast("long").alias("g"),
         )
     )
-    rederived, _ = tracker.checkpoint(rederived)
-    # release overdelete scaffolding (the initial delta + every newly
-    # piece); the survivors + rederived blocks stay alive — they back
-    # the returned store's lineage
-    tracker.release(overdelete_ids)
 
-    # ---- 3. propagate (standard insert fixpoint, delta-seeded) -------
-    base = survivors.unionByName(rederived)
-    res = fixpoint(
-        spark,
-        base,
-        terms,
-        rules,
-        const_ids,
-        initial_delta=rederived,
-        initial_round=max_round + 1,
-        max_rounds=max_round + 1 + max_rounds,
-        **fixpoint_kw,
-    )
-    # the survivors/rederived checkpoints back the returned store's
-    # lineage — hand their blocks to the result so release() frees them
-    # (a long-running caller, e.g. streaming retraction, must not leak
-    # one survivors copy per call)
+    # ---- 3. propagate (insert fixpoint seeded with the rederived) ----
+    # the seed reads the overdelete pieces: release them once it is a piece
+    try:
+        res = fixpoint(
+            spark, survivors, terms, rules, const_ids, initial_delta=rederived,
+            store_rows=n_survivors, initial_round=max_round + 1,
+            max_rounds=max_round + 1 + max_rounds, **fixpoint_kw,
+        )
+    finally:
+        tracker.release(overdelete_ids)
+    # the survivors checkpoint is the returned store's base piece — hand
+    # its blocks to the result so release() frees them (streaming
+    # retraction must not leak one survivors copy per call)
     res.cache_ids |= tracker.ids
     return res

@@ -2,16 +2,16 @@
 
 The reference has no streaming (SURVEY.md §2.10), but its seeded
 ``deduce_from_triple`` API (src/system/mod.rs:124-149) is exactly the
-incremental-maintenance hook: each micro-batch of new stated triples is
-a *delta*, and one semi-naive round per batch keeps the materialized
-graph closed under the rule system (rules whose every hypothesis slot
-can be fed by earlier facts stay correct because the store passed to
-the round is the accumulated graph).
+incremental-maintenance hook: each micro-batch's stated triples seed a
+semi-naive fixpoint over the accumulated closed graph (rules whose
+every hypothesis slot can be fed by earlier facts stay correct because
+the store passed to the rounds is the accumulated graph).
 
 Shape: ``readStream`` (file source) → ``foreachBatch`` → per-batch:
-encode, delta-deduce against the accumulated store, anti-join, append
-to the graph directory.  ``foreachBatch`` gives exactly-once appends on
-restart via the streaming checkpoint.
+encode, one seeded fixpoint call (the seed anti-joined against the
+store and materialized once), one checkpoint of the new generation.
+``foreachBatch`` gives exactly-once batches on restart via the
+streaming checkpoint.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..encode import dedup_triples, encode_edges
 from ..engine import System
-from ..schemas import PAGES_SCHEMA, TRIPLE_KEY
+from ..schemas import PAGES_SCHEMA
 from ..terms import merge_terms
 
 
@@ -31,11 +31,12 @@ class StreamingGraph:
     """Accumulates a closed graph from a stream of page batches.
 
     Every batch runs through ``operators.fixpoint.fixpoint`` — the first
-    with a full deduce, later ones seeded with the batch delta
-    (``initial_delta``) — so the incremental path shares ALL of the batch
-    path's semantics: minted-term accumulation into the dictionary,
-    Eq/True side tables, strict expression errors, rule dispatch, and
-    the raise-on-round-cap guarantee (no silent partial closure)."""
+    with a full deduce, later ones with the closed store and the batch's
+    stated facts apart from it as the seed (``initial_delta``) — so the
+    incremental path shares ALL of the batch path's semantics:
+    minted-term accumulation into the dictionary, Eq/True side tables,
+    expression errors, rule dispatch, and the raise-on-round-cap
+    guarantee (no silent partial closure)."""
 
     def __init__(
         self,
@@ -61,6 +62,7 @@ class StreamingGraph:
         self.terms: DataFrame | None = None
         self.eqs: DataFrame | None = None
         self.trues: DataFrame | None = None
+        self._store_rows = 0
         self.batches = 0
         self._tracker = CheckpointTracker(spark)
         self._gen_ids: set[int] = set()
@@ -78,12 +80,11 @@ class StreamingGraph:
         if self.store is None:
             # first batch: a full deduce over the batch's own checkpoint,
             # whose observed count lets the fixpoint take it as its base
-            store, delta, store_rows = new_triples, None, stated.get["n"]
+            store, seed, store_rows = new_triples, None, stated.get["n"]
             terms = merge_terms(new_terms, self.system.rule_constants_terms())
         else:
-            # delta = genuinely-new stated facts; store already closed
-            delta = new_triples.join(self.store.select(*TRIPLE_KEY), TRIPLE_KEY, "left_anti")
-            store, store_rows = self.store.unionByName(delta), None
+            # the fixpoint drops the seed facts the store already holds
+            store, seed, store_rows = self.store, new_triples, self._store_rows
             terms = merge_terms(self.terms, new_terms)
         res = fixpoint(
             self.spark,
@@ -92,7 +93,7 @@ class StreamingGraph:
             self.system.rules,
             self.system.const_ids(),
             self.system.functions,
-            initial_delta=delta,
+            initial_delta=seed,
             store_rows=store_rows,
         )
         eqs = res.eqs if self.eqs is None else self.eqs.unionByName(res.eqs).dropDuplicates()
@@ -138,7 +139,11 @@ class StreamingGraph:
         exactly one generation of (store, terms, eqs, trues) between
         batches."""
         old_gen = self._gen_ids
-        self.store, ids_s = self._tracker.checkpoint(res.store)
+        rows = Observation()
+        self.store, ids_s = self._tracker.checkpoint(
+            res.store.observe(rows, F.count(F.lit(1)).alias("n"))
+        )
+        self._store_rows = rows.get["n"]
         self.terms, ids_t = self._tracker.checkpoint(res.terms)
         self.eqs, ids_e = self._tracker.checkpoint(eqs)
         self.trues, ids_r = self._tracker.checkpoint(trues)
@@ -158,7 +163,8 @@ class StreamingGraph:
         return commit_graph(self.store, self.terms, self.out_dir)
 
     def counts(self) -> tuple[int, int]:
-        return (self.store.count() if self.store is not None else 0, self.batches)
+        """(store rows observed on the generation checkpoint, batches)."""
+        return (self._store_rows, self.batches)
 
 
 def stream_pages_to_graph(

@@ -375,6 +375,39 @@ def test_streaming_replay_idempotent(spark):
     sg._tracker.release()
 
 
+def test_streaming_counts_submit_no_job(spark, count_jobs):
+    """``StreamingGraph.counts()`` returns the store row count observed on
+    the checkpoint that copied the current generation (the count the
+    next batch passes the fixpoint as ``store_rows``): it submits no
+    Spark job.  A batch that repeats a stored fact adds it once."""
+    from inferdf_rs_spark.encode import iri_edges
+    from inferdf_rs_spark.rules import stmt_triple
+    from inferdf_rs_spark.streaming.ingest import StreamingGraph
+
+    EXK = "https://example.org/c#"
+    r = rule(
+        variables=2,
+        hypothesis=[pat("+", v(0), iri(EXK + "a"), v(1))],
+        statements=[stmt_triple("+", v(0), iri(EXK + "b"), v(1))],
+    )
+    sg = StreamingGraph(spark, System(spark, [r]), out_dir="/tmp/unused")
+
+    def batch(rows):
+        return iri_edges(
+            spark.createDataFrame(rows, "s_lex string, p_lex string, o_lex string")
+        )
+
+    sg.process_batch(batch([(EXK + "x1", EXK + "a", EXK + "y1")]), 0)
+    sg.process_batch(
+        batch([(EXK + "x1", EXK + "a", EXK + "y1"), (EXK + "x2", EXK + "a", EXK + "y2")]), 1
+    )
+    with count_jobs() as jobs:
+        counts = sg.counts()
+    assert jobs.n == 0
+    assert counts == (4, 2) and sg.store.count() == 4
+    sg._tracker.release()
+
+
 def test_streaming_snapshot_commits_monotone_feed(spark, tmp_path):
     """commit_every=1: each micro-batch publishes a snapshot version of
     the accumulated graph; because incremental maintenance only appends,

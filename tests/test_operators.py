@@ -706,7 +706,7 @@ def test_fixpoint_round_action_budget(spark, monkeypatch):
     unmaterialized because no rule reads facets or mints terms), a
     no-minting small-regime round costs exactly ONE
     driver action — the delta materialization (eager localCheckpoint),
-    which carries n_new, the strict-error probe and the next round's
+    which carries n_new, the expression-error probe and the next round's
     dispatch predicate set as an Observation.  Earlier rounds paid a
     separate stats aggregate, and before that a ``new.count()``, a
     ``limit(1).collect()`` error probe and the next round's
@@ -755,6 +755,105 @@ def test_fixpoint_round_action_budget(spark, monkeypatch):
     assert res.store.count() == 17  # 15 anc closure + other + other2
     # setup = the input checkpoint; then 1 action per round
     assert n_actions == 1 + res.rounds, actions
+
+
+def _record_actions(monkeypatch) -> list:
+    """Record every driver action (``count``, ``collect``, eager
+    ``localCheckpoint``) into the returned list until
+    ``monkeypatch.undo()``."""
+    import pyspark.sql.classic.dataframe as dfmod
+
+    actions: list[str] = []
+    orig_count = dfmod.DataFrame.count
+    orig_collect = dfmod.DataFrame.collect
+    orig_ckpt = dfmod.DataFrame.localCheckpoint
+
+    def _ckpt(self, eager=True, storageLevel=None):
+        if eager:
+            actions.append("ckpt")
+        if storageLevel is None:
+            return orig_ckpt(self, eager=eager)
+        return orig_ckpt(self, eager=eager, storageLevel=storageLevel)
+
+    monkeypatch.setattr(
+        dfmod.DataFrame, "count", lambda self: (actions.append("count"), orig_count(self))[1]
+    )
+    monkeypatch.setattr(
+        dfmod.DataFrame, "collect", lambda self: (actions.append("collect"), orig_collect(self))[1]
+    )
+    monkeypatch.setattr(dfmod.DataFrame, "localCheckpoint", _ckpt)
+    return actions
+
+
+def test_fixpoint_large_regime_and_seeded_action_budget(spark, monkeypatch):
+    """Every delta is materialized one way: one checkpoint whose own job
+    observes its row count and its (p, sign) set; in the large regime a
+    co-partitioned piece then re-reads its blocks.  So the large regime
+    costs 2 + 2·rounds driver actions (the input checkpoint, its
+    partitioning into the first piece, then two per round) with no
+    collect, and a call seeded with candidate facts apart from a
+    checkpointed closed store of known count costs 1 + rounds (the
+    seed's checkpoint, then one per round), with no dispatch probe."""
+    from inferdf_rs_spark.engine import Dataset
+
+    chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
+    other = [(blank("x"), iri(EX + "other"), blank("y"))]
+    ds = build_dataset(spark, chain + other)
+    r_other = rule(
+        variables=2,
+        hypothesis=[pat("+", v(0), iri(EX + "other"), v(1))],
+        statements=[stmt_triple("+", v(1), iri(EX + "other2"), v(0))],
+    )
+    sysm = System(spark, [_tc_rule(), r_other])
+    sysm.const_ids()
+
+    actions = _record_actions(monkeypatch)
+    res = sysm.fixpoint(ds, store_broadcast_rows=0)
+    large = list(actions)
+    monkeypatch.undo()
+    assert res.store.count() == 17
+    assert "collect" not in large and len(large) == 2 + 2 * res.rounds, large
+    res.release()
+
+    closed = sysm.fixpoint(ds)
+    store = closed.store.localCheckpoint(eager=True)
+    closed.release()
+    grown = chain + [(blank("5"), iri(EX + "anc"), blank("6"))]
+    seed = build_dataset(spark, grown + other)
+    actions = _record_actions(monkeypatch)
+    res = sysm.fixpoint(Dataset(store, seed.terms, n_triples=17), initial_delta=seed.triples)
+    seeded = list(actions)
+    monkeypatch.undo()
+    assert res.store.count() == 23  # C(7,2) = 21 anc facts + other + other2
+    assert "collect" not in seeded and len(seeded) == 1 + res.rounds, seeded
+    res.release()
+
+
+def test_fixpoint_seed_overlapping_closed_store_is_batch_closure(spark, tmp_path):
+    """A seed that partly overlaps a closed store is anti-joined against
+    it before it becomes a store piece: the result is the batch closure
+    of the grown fact set, with no duplicate (s, p, o, sign) row.  A
+    checkpointed run cannot take a seed (its parquet base would miss
+    it), so passing both raises before any work."""
+    from inferdf_rs_spark.engine import Dataset
+    from inferdf_rs_spark.schemas import TRIPLE_KEY
+
+    chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
+    grown = build_dataset(spark, chain + [(blank("5"), iri(EX + "anc"), blank("6"))])
+    sysm = System(spark, [_tc_rule()])
+    closed = sysm.fixpoint(build_dataset(spark, chain))
+
+    res = sysm.fixpoint(Dataset(closed.store, grown.terms), initial_delta=grown.triples)
+    rows = [tuple(r) for r in res.store.select(*TRIPLE_KEY).collect()]
+    batch = sysm.fixpoint(grown)
+    expected = {tuple(r) for r in batch.store.select(*TRIPLE_KEY).collect()}
+    assert len(rows) == len(set(rows)) == 21
+    assert set(rows) == expected
+    for r in (res, batch, closed):
+        r.release()
+
+    with pytest.raises(ValueError, match="initial_delta"):
+        sysm.fixpoint(grown, checkpoint_dir=str(tmp_path / "ck"), initial_delta=grown.triples)
 
 
 def test_fixpoint_materialized_input_is_base_piece(spark, monkeypatch):

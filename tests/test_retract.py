@@ -120,6 +120,18 @@ def test_retract_rejects_unsupported_conclusions(spark):
             sysm.retract(ds, empty)
 
 
+def test_retract_rejects_checkpoint_dir(spark, tmp_path):
+    """The propagation fixpoint is seeded with the rederived facts apart
+    from the survivors, and a checkpointed fixpoint resumes from its
+    parquet base alone: ``checkpoint_dir`` is refused before any work."""
+    ds = build_dataset(spark, _edges([("a", "b"), ("b", "c")]))
+    sysm = System(spark, [TC])
+    ck = tmp_path / "ck"
+    with pytest.raises(ValueError, match="retract"):
+        sysm.retract(ds, ds.triples.limit(0), checkpoint_dir=str(ck))
+    assert not ck.exists()
+
+
 def test_retract_negative_conclusions_with_insert_negatives(spark):
     from inferdf_rs_spark.rules import stmt_triple as st
 

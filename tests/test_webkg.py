@@ -384,10 +384,12 @@ def test_pipeline_job_count_pinned(spark, count_jobs, tmp_path):
 def test_stream_micro_batch_job_count_pinned(spark, count_jobs):
     """One base and one delta ``StreamingGraph.process_batch`` over the
     golden fixture's pages (pages 0-39, then 40-59) submit exactly 26
-    and 29 Spark jobs, on every run: each batch makes one fixpoint
+    and 21 Spark jobs, on every run: each batch makes one fixpoint
     call, and the base batch's stated triples, checkpointed with their
     count observed on the same job, are that fixpoint's base piece as
-    they are.  A change that cuts jobs lowers these pins."""
+    they are.  The delta batch passes the closed store as it is and its
+    stated triples as the seed, which is anti-joined against the store
+    and materialized once.  A change that cuts jobs lowers these pins."""
     from inferdf_rs_spark import System
     from inferdf_rs_spark.streaming.ingest import StreamingGraph
 
@@ -408,7 +410,7 @@ def test_stream_micro_batch_job_count_pinned(spark, count_jobs):
             counts.append(jobs.n)
         assert sg.counts() == (pr.n_total, 2)
         sg._tracker.release()
-    assert counts == [26, 29] * 2, counts
+    assert counts == [26, 21] * 2, counts
 
 
 def test_pipeline_dedup_pages_drops_mirrors(spark):
