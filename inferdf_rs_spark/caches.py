@@ -13,8 +13,9 @@ checkpoint call and remember exactly the ids it created.  The tracker
 makes checkpoints only, never Dataset-level persists: a persist also
 registers its plan in the session's CacheManager, and releasing its
 blocks by RDD id leaves that entry behind (a later scan of the same
-plan reads through an empty cache).  An input store the fixpoint must
-materialize is checkpointed through the tracker like every other table.
+plan reads through an empty cache).  The web-KG path holds no
+Dataset-level persist: extraction, the stated layer, a fixpoint input,
+each delta and each stream generation are tracker checkpoints.
 Driver-side, single-threaded use only — a concurrent persist from
 another thread would land in the wrong tracked set (documented
 limitation; every driver loop in this engine is single-threaded).

@@ -20,7 +20,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -293,19 +293,23 @@ def make_fused_extract_detect(alias_list: list[str], spark=None):
 
 
 def extract_mentions(
-    pages: DataFrame, aliases: list[str], spark, skip_fidelity: bool = False
+    pages: DataFrame, aliases: list[str], tracker, skip_fidelity: bool = False
 ) -> tuple[DataFrame, int, int]:
     """The extraction stage of both the batch pipeline and the stream:
-    one ``make_fused_extract_detect`` pass per page, then one aggregate
-    for the page and fidelity-violation counts.  Only the slim result
-    ``(url, lang, surfaces, _fid_ok)`` is persisted (~0.1KB/page; caching
-    raw html+text costs 3.5KB/page, measured 84s vs 31s at 2M pages).
+    one ``make_fused_extract_detect`` pass per page, materialized as one
+    ``tracker`` checkpoint (``caches.CheckpointTracker``) of the slim
+    result ``(url, lang, surfaces, _fid_ok)`` (~0.1KB/page; caching raw
+    html+text costs 3.5KB/page, measured 84s vs 31s at 2M pages), whose
+    own job observes the page and fidelity-violation counts.
 
-    Returns ``(persisted frame, n_pages, n_violations)``; the caller
-    unpersists the frame.  Violations raise (after releasing the frame)
-    unless ``skip_fidelity``, which still reports the measured count."""
-    det = make_fused_extract_detect(aliases, spark=spark)
-    out = (
+    Returns ``(checkpointed frame, n_pages, n_violations)``.  Its blocks
+    are in ``tracker.ids``: the caller releases them once linking and
+    encoding have read them.  Violations raise (after releasing the
+    blocks) unless ``skip_fidelity``, which still reports the measured
+    count."""
+    det = make_fused_extract_detect(aliases, spark=tracker.spark)
+    stats = Observation()
+    out, ids = tracker.checkpoint(
         pages.select(
             "url", "lang", det(F.decode(F.col("html"), "utf-8"), F.col("text")).alias("_ex")
         )
@@ -315,17 +319,17 @@ def extract_mentions(
             F.col("_ex.surfaces").alias("surfaces"),
             F.col("_ex.fid_ok").alias("_fid_ok"),
         )
-        .persist()
+        .observe(
+            stats,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("_fid_ok"), 0).otherwise(1)).alias("bad"),
+        )
     )
-    stats = out.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("_fid_ok"), 0).otherwise(1)).alias("bad"),
-    ).collect()[0]
-    bad = int(stats.bad or 0)
+    bad = int(stats.get["bad"] or 0)
     if bad and not skip_fidelity:
-        out.unpersist()
+        tracker.release(ids)
         raise RuntimeError(f"extraction fidelity violated on {bad} urls")
-    return out, stats.n, bad
+    return out, stats.get["n"], bad
 
 
 def best_links(alias_dict: DataFrame) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import terms as _terms_mod
+from ..caches import CheckpointTracker
 from ..encode import dedup_triples, encode_edges, term_rows
 from ..engine import Dataset, System
 from ..extraction import synth
@@ -226,7 +227,10 @@ def run_pipeline(
     )
     if aliases is None:
         aliases = collect_alias_vocabulary(alias_d)
-    pages, n_pages, fid = extract_mentions(pages, aliases, spark, skip_fidelity=skip_fidelity)
+    # every table the run materializes is a checkpoint of this tracker
+    tracker = CheckpointTracker(spark)
+    pages, n_pages, fid = extract_mentions(pages, aliases, tracker, skip_fidelity=skip_fidelity)
+    extracted = set(tracker.ids)
     timings["extract_verify"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
@@ -253,17 +257,15 @@ def run_pipeline(
     # terms join the dictionary so decode/facets cover them.  The row
     # count rides on the checkpoint's own job as an Observation.
     stated = Observation()
-    triples = (
-        dedup_triples(ds.triples)
-        .observe(stated, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    triples, _ = tracker.checkpoint(
+        dedup_triples(ds.triples).observe(stated, F.count(F.lit(1)).alias("n"))
     )
-    terms = (
-        ds.terms.unionByName(sysm.rule_constants_terms())
-        .dropDuplicates(["term_id"])
-        .localCheckpoint(eager=True)
+    terms, _ = tracker.checkpoint(
+        ds.terms.unionByName(sysm.rule_constants_terms()).dropDuplicates(["term_id"])
     )
     n_stated = stated.get["n"]
+    # linking and encoding have read the extracted pages
+    tracker.release(extracted)
     if audit_dictionary:
         # 64-bit birthday-bound guard (terms.audit_collisions): at 10^12
         # terms collisions become plausible; fail fast instead of
@@ -272,8 +274,8 @@ def run_pipeline(
 
         n_coll = audit_collisions(terms).count()
         if n_coll:
+            tracker.release()
             raise RuntimeError(f"dictionary hash collisions detected: {n_coll} ids")
-    pages.unpersist()
     timings["link_encode"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
@@ -285,6 +287,8 @@ def run_pipeline(
         checkpoint_dir=checkpoint_dir,
         max_rounds=max_rounds,
     )
+    # release() frees the whole run: the stated layer and the terms too
+    res.cache_ids |= tracker.ids
     # the store is the stated layer plus each round's new facts (a
     # resumed checkpoint's metrics cover every completed round)
     n_total = n_stated + sum(m["new_facts"] for m in res.metrics)
@@ -431,10 +435,8 @@ def read_graph(spark: SparkSession, out_dir: str) -> Dataset:
     partitions (the reference's canonical-pattern index, expressed as
     Hive-style partition pruning).  The count lives on the Dataset — not
     as a DataFrame attribute — so it survives ``.filter()``/``.select()``
-    composition over ``triples``; the legacy ``_inferdf_p_buckets``
-    attribute is still set for direct-DataFrame callers holding the
-    pristine object.  The engine drops the extra column at fixpoint
-    entry, so the dataset still feeds every API.
+    composition over ``triples``.  The engine drops the extra column at
+    fixpoint entry, so the dataset still feeds every API.
 
     Both tables open with the schemas ``write_graph`` recorded in
     ``graph_meta.json``, so opening submits no Spark job; a layout whose
@@ -466,8 +468,6 @@ def read_graph(spark: SparkSession, out_dir: str) -> Dataset:
     p_buckets = meta.get("n_p_buckets")
     if p_buckets is None:
         triples = triples.drop("p_bucket")  # pre-meta layout: no pruning
-    else:
-        triples._inferdf_p_buckets = p_buckets
     return Dataset(
         triples,
         read("terms"),

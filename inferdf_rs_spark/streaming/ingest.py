@@ -16,11 +16,10 @@ streaming checkpoint.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..caches import CheckpointTracker
 from ..encode import dedup_triples, encode_edges
 from ..engine import System
 from ..schemas import PAGES_SCHEMA
@@ -45,8 +44,6 @@ class StreamingGraph:
         out_dir: str,
         commit_every: int | None = None,
     ):
-        from ..caches import CheckpointTracker
-
         self.spark = spark
         self.system = system
         self.out_dir = out_dir
@@ -68,24 +65,26 @@ class StreamingGraph:
         self._gen_ids: set[int] = set()
 
     def process_batch(self, edges: DataFrame, epoch_id: int) -> None:
+        """Close the graph over one micro-batch's edges with one fixpoint
+        call, materializing its tables the way the batch run does.  The
+        batch makes no checkpoint of its own: the fixpoint materializes
+        the stated triples (the first batch's input store, checkpointed
+        once with its count observed; a later batch's seed, staged once
+        apart from the store) and ``_swap_generation`` the merged
+        dictionary.  A batch whose fixpoint raises leaves the pool as it
+        found it."""
         from ..operators.fixpoint import fixpoint
 
         ds = encode_edges(self.spark, edges, src_partition=f"stream:{epoch_id}")
-        stated = Observation()
-        new_triples, ids_in1 = self._tracker.checkpoint(
-            dedup_triples(ds.triples).observe(stated, F.count(F.lit(1)).alias("n"))
-        )
-        new_terms, ids_in2 = self._tracker.checkpoint(ds.terms)
-
+        stated = dedup_triples(ds.triples)
         if self.store is None:
-            # first batch: a full deduce over the batch's own checkpoint,
-            # whose observed count lets the fixpoint take it as its base
-            store, seed, store_rows = new_triples, None, stated.get["n"]
-            terms = merge_terms(new_terms, self.system.rule_constants_terms())
+            # first batch: a full deduce over the batch's stated triples
+            store, seed, store_rows = stated, None, None
+            terms = merge_terms(ds.terms, self.system.rule_constants_terms())
         else:
             # the fixpoint drops the seed facts the store already holds
-            store, seed, store_rows = self.store, new_triples, self._store_rows
-            terms = merge_terms(self.terms, new_terms)
+            store, seed, store_rows = self.store, stated, self._store_rows
+            terms = merge_terms(self.terms, ds.terms)
         res = fixpoint(
             self.spark,
             store,
@@ -100,7 +99,7 @@ class StreamingGraph:
         trues = (
             res.trues if self.trues is None else self.trues.unionByName(res.trues).dropDuplicates()
         )
-        self._swap_generation(res, eqs, trues, ids_in1 | ids_in2)
+        self._swap_generation(res, eqs, trues)
         self.batches += 1
         if self.commit_every and self.batches % self.commit_every == 0:
             self.publish()
@@ -128,16 +127,14 @@ class StreamingGraph:
         )
         self._swap_generation(res, self.eqs, self.trues)
 
-    def _swap_generation(
-        self, res, eqs: DataFrame, trues: DataFrame, inputs: set = frozenset()
-    ) -> None:
+    def _swap_generation(self, res, eqs: DataFrame, trues: DataFrame) -> None:
         """Copy the result out of the fixpoint's internal caches, then
-        release them, the previous generation and the batch's ``inputs``
-        checkpoints: without this every micro-batch would leave one
-        cached copy of the (growing) store in the pool — unbounded
-        memory/disk growth in a long-running stream.  The pool holds
-        exactly one generation of (store, terms, eqs, trues) between
-        batches."""
+        release them and the previous generation: without this every
+        micro-batch would leave one cached copy of the (growing) store
+        in the pool — unbounded memory/disk growth in a long-running
+        stream.  This is where a batch's merged dictionary is
+        materialized, once.  The pool holds exactly one generation of
+        (store, terms, eqs, trues) between batches."""
         old_gen = self._gen_ids
         rows = Observation()
         self.store, ids_s = self._tracker.checkpoint(
@@ -149,7 +146,7 @@ class StreamingGraph:
         self.trues, ids_r = self._tracker.checkpoint(trues)
         self._gen_ids = ids_s | ids_t | ids_e | ids_r
         res.release()
-        self._tracker.release(old_gen | inputs)
+        self._tracker.release(old_gen)
 
     def publish(self) -> int:
         """Commit the accumulated graph as a new snapshot version under
@@ -196,14 +193,18 @@ def stream_pages_to_graph(
     )
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        # the stage's own count decides emptiness (no separate probe job)
-        pages, n_pages, _ = extract_mentions(batch_df, aliases, spark)
-        if n_pages == 0:
-            pages.unpersist()
-            return
-        edges = stated_edges(spark, pages, alias_dict, entity_types, sameas, surfaces_col="surfaces")
-        sg.process_batch(edges, epoch_id)
-        pages.unpersist()
+        tracker = CheckpointTracker(spark)
+        try:
+            # the stage's own count decides emptiness (no separate probe job)
+            pages, n_pages, _ = extract_mentions(batch_df, aliases, tracker)
+            if n_pages:
+                edges = stated_edges(
+                    spark, pages, alias_dict, entity_types, sameas, surfaces_col="surfaces"
+                )
+                sg.process_batch(edges, epoch_id)
+        finally:
+            # the batch's generation no longer reads the extracted pages
+            tracker.release()
 
     writer = stream.writeStream.foreachBatch(handle).trigger(availableNow=True)
     if checkpoint:

@@ -237,3 +237,47 @@ def test_streaming_pool_bounded_across_batches(spark):
     assert sizes[2] <= sizes[1], f"streaming pool grew across batches: {sizes}"
     assert sg.store.count() == 6  # 3 stated + 3 deduced
     sg._tracker.release()
+
+
+def test_pipeline_release_restores_pool(spark):
+    # run_pipeline materializes every stage through one tracker whose ids
+    # ride on the result: release() frees the whole run, the extracted
+    # pages, the stated layer and the terms included
+    from inferdf_rs_spark.extraction import synth
+    from inferdf_rs_spark.pipelines import webkg
+
+    pages = synth.synth_pages(spark, 60)
+    baseline = persistent_rdd_ids(spark)
+    pr = webkg.run_pipeline(spark, pages)
+    assert pr.result.store.count() == pr.n_total
+    pr.result.release()
+    left = persistent_rdd_ids(spark) - baseline
+    assert left == set(), f"release() left {len(left)} checkpoints of the run behind"
+
+
+def test_stream_batch_expression_error_releases_pool(spark):
+    # a micro-batch makes no checkpoint of its own, so one whose fixpoint
+    # raises leaves the pool as it found it
+    import pytest
+
+    from inferdf_rs_spark import call, stmt_true
+    from inferdf_rs_spark.operators.fixpoint import ExpressionError
+    from inferdf_rs_spark.schemas import KIND_LITERAL, XSD
+    from inferdf_rs_spark.streaming.ingest import StreamingGraph
+
+    # unparsable decimal facet → conversion error inside the compare
+    edges = spark.createDataFrame(
+        [(EX + "x", EX + "p", KIND_LITERAL, "abc", XSD + "int")],
+        "s_lex string, p_lex string, o_kind int, o_lex string, o_dt string",
+    )
+    r = rule(
+        variables=2,
+        hypothesis=[pat("+", v(0), iri(EX + "p"), v(1))],
+        statements=[stmt_true("+", call("lt", v(1)))],
+    )
+    sg = StreamingGraph(spark, System(spark, [r]), out_dir="/tmp/unused")
+    baseline = persistent_rdd_ids(spark)
+    with pytest.raises(ExpressionError):
+        sg.process_batch(edges, 0)
+    leaked = persistent_rdd_ids(spark) - baseline
+    assert leaked == set(), f"a failed micro-batch leaked {len(leaked)} checkpoints"

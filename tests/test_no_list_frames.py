@@ -5,16 +5,24 @@ modules are parsed, not imported):
   ``session.local_frame``: a ``createDataFrame`` call anywhere else
   builds an RDD-backed table whose scans run Python workers (~300 ms a
   task);
-- the rule loop (fixpoint and retraction) materializes every delta by a
-  checkpoint whose own job observes its stats: a ``persist`` there
-  would be a second, untracked way to hold a delta."""
+- the rule loop (fixpoint and retraction) and the web-KG stages around
+  it (extraction, the batch run, a stream micro-batch) materialize every
+  table by a ``CheckpointTracker`` checkpoint whose own job observes its
+  stats: a ``persist`` or a bare ``localCheckpoint`` there would be a
+  second, untracked way to hold a table."""
 
 import ast
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "inferdf_rs_spark"
 ALLOWED = ("session.py", "local_frame")
-CHECKPOINT_ONLY = ("operators/fixpoint.py", "operators/retract.py")
+CHECKPOINT_ONLY = (
+    "operators/fixpoint.py",
+    "operators/retract.py",
+    "extraction/extract.py",
+    "pipelines/webkg.py",
+    "streaming/ingest.py",
+)
 
 
 def method_calls(path: pathlib.Path, attr: str):
@@ -63,14 +71,21 @@ def test_detects_a_list_built_frame(tmp_path):
 
 def test_rule_loop_deltas_are_checkpoints_only():
     offenders = [
-        f"{name}:{lineno} (in {func})"
+        f"{name}:{lineno} {attr} (in {func})"
         for name in CHECKPOINT_ONLY
-        for lineno, func in method_calls(PKG / name, "persist")
+        for attr in ("persist", "localCheckpoint")
+        for lineno, func in method_calls(PKG / name, attr)
     ]
-    assert not offenders, "materialize rule-loop deltas by checkpoint: " + ", ".join(offenders)
+    assert not offenders, "materialize through CheckpointTracker: " + ", ".join(offenders)
 
 
 def test_detects_a_persisted_delta(tmp_path):
     mod = tmp_path / "m.py"
-    mod.write_text("def stage(df, lvl):\n    return df.persist(lvl)\n")
+    mod.write_text(
+        "def stage(df, lvl):\n"
+        "    return df.persist(lvl)\n"
+        "def stage2(df):\n"
+        "    return df.localCheckpoint(eager=True)\n"
+    )
     assert list(method_calls(mod, "persist")) == [(2, "stage")]
+    assert list(method_calls(mod, "localCheckpoint")) == [(4, "stage2")]

@@ -252,7 +252,7 @@ def test_materialized_graph_p_bound_scan_prunes_partitions(spark, tmp_path):
     out = str(tmp_path / "graph")
     write_graph(ds.triples, ds.terms, out)
     rg = read_graph(spark, out)
-    assert getattr(rg.triples, "_inferdf_p_buckets", None) == 16
+    assert rg.p_buckets == 16
 
     knows = iri(EX + "knows")
     cids = encode_terms(spark, [knows])
@@ -264,17 +264,14 @@ def test_materialized_graph_p_bound_scan_prunes_partitions(spark, tmp_path):
         assert "p_bucket" in pf_lines[0].split("PartitionFilters")[1]
         assert df.count() == expect_rows
 
-    assert_prunes(scan_pattern(rg.triples, pat("+", v(0), knows, v(1)), cids), 4)
+    assert_prunes(scan_pattern(rg.triples, pat("+", v(0), knows, v(1)), cids, p_buckets=rg.p_buckets), 4)
 
     # pruning must SURVIVE composition: the bucket count rides on the
-    # Dataset, so a .filter()-wrapped store (which sheds any ad-hoc
-    # DataFrame attribute) still prunes when the engine threads
-    # rg.p_buckets through (ADVICE r3)
-    assert rg.p_buckets == 16
+    # Dataset, so a .filter()-wrapped store still prunes when the engine
+    # threads rg.p_buckets through (ADVICE r3)
     from pyspark.sql import functions as F
 
     wrapped = rg.triples.filter(F.col("sign"))
-    assert getattr(wrapped, "_inferdf_p_buckets", None) is None  # attr is gone
     assert_prunes(
         scan_pattern(wrapped, pat("+", v(0), knows, v(1)), cids, p_buckets=rg.p_buckets), 4
     )
@@ -370,26 +367,29 @@ def test_small_store_fixpoint_job_count_pinned(spark, count_jobs):
 
 def test_pipeline_job_count_pinned(spark, count_jobs, tmp_path):
     """``run_pipeline`` on the golden fixture, written out, submits
-    exactly 37 Spark jobs on every run, the first in the session
+    exactly 35 Spark jobs on every run, the first in the session
     included: the fixpoint's 19 (pinned above), and extraction, encode
-    and ``write_graph`` around it.  A change that cuts jobs lowers this
-    pin."""
+    and ``write_graph`` around it.  Extraction is one checkpoint whose
+    own job observes the page and fidelity-violation counts.  A change
+    that cuts jobs lowers this pin."""
     pages = synth.synth_pages(spark, N_PAGES)
     for i in range(2):
         with count_jobs() as jobs:
             pr = webkg.run_pipeline(spark, pages, out_dir=str(tmp_path / f"g{i}"))
-        assert (pr.n_total, jobs.n) == (389, 37)
+        assert (pr.n_total, jobs.n) == (389, 35)
 
 
 def test_stream_micro_batch_job_count_pinned(spark, count_jobs):
     """One base and one delta ``StreamingGraph.process_batch`` over the
-    golden fixture's pages (pages 0-39, then 40-59) submit exactly 26
-    and 21 Spark jobs, on every run: each batch makes one fixpoint
-    call, and the base batch's stated triples, checkpointed with their
-    count observed on the same job, are that fixpoint's base piece as
-    they are.  The delta batch passes the closed store as it is and its
-    stated triples as the seed, which is anti-joined against the store
-    and materialized once.  A change that cuts jobs lowers these pins."""
+    golden fixture's pages (pages 0-39, then 40-59) submit exactly 25
+    and 19 Spark jobs, on every run: each batch makes one fixpoint call
+    and no checkpoint of its own.  The base batch passes its stated
+    triples as they are, which the fixpoint's input rule checkpoints
+    once with their count observed on the same job.  The delta batch
+    passes the closed store as it is and its stated triples as the
+    seed, which is anti-joined against the store and materialized once.
+    The merged dictionary is materialized once, by the generation swap.
+    A change that cuts jobs lowers these pins."""
     from inferdf_rs_spark import System
     from inferdf_rs_spark.streaming.ingest import StreamingGraph
 
@@ -410,7 +410,7 @@ def test_stream_micro_batch_job_count_pinned(spark, count_jobs):
             counts.append(jobs.n)
         assert sg.counts() == (pr.n_total, 2)
         sg._tracker.release()
-    assert counts == [26, 21] * 2, counts
+    assert counts == [25, 19] * 2, counts
 
 
 def test_pipeline_dedup_pages_drops_mirrors(spark):
